@@ -995,8 +995,9 @@ def _pipeline_medallion(spark: SparkSession, sf_dir: str) -> DataFrame:
       (null/negative values dropped, day bucket derived) and lands
       through StreamingViewMaintainer — silver appends
       batch-id-stamped, the gold per-(day, event_type) aggregate
-      advanced from silver's typed change feed ONLY (IVM: the silver
-      table is never rescanned). Honest note on the pacing option
+      advanced from each landed batch, or from silver's typed change
+      feed for any other window (IVM: the silver table is never
+      rescanned). Honest note on the pacing option
       under this entry's FRESH checkpoint: Python sources fall back
       to single-batch execution for availableNow, and a fresh run's
       first trigger is uncapped (FORMAT.md), so the three bronze

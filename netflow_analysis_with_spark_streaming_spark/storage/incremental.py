@@ -1,24 +1,38 @@
-"""Incremental materialized-view maintenance over the typed change
-feed (storage/versioned.py read_change_feed) — the CDC-consumption
-pattern the feed exists for: a downstream aggregate is advanced by the
-rows that CHANGED, never by re-scanning the fact table.
+"""Incremental materialized-view maintenance: a sum/count aggregate
+(``keys + n_rows long + sum_<measure> double``) advanced by the rows
+that CHANGED in a fact table, never by re-scanning it. min/max are
+NOT maintainable from deltas alone and are not offered.
 
-Scale rationale: at 100 TB the fact table is unrecomputable on every
-refresh; a feed window is proportional to the delta. ``feed_delta``
-is one hash-agg over the window (keys-cardinality output) and
-``apply_delta`` touches only the keys present in the window —
-a copy-on-write upsert of the aggregate rows that moved, which is the
-same bounded-work contract as Delta/Materialize-style IVM for
-sum/count aggregates (min/max are NOT maintainable from deltas alone
-and are deliberately not offered here).
+The view is keys-sized (one row per grouping key; keys are scalars or
+dates, not timestamps), so the merge runs on the DRIVER: a window's
+per-key delta (one Spark hash-agg, collected) folds into a driver copy
+of the view — counts add, sums add as ``float + float`` (bit-for-bit
+Spark's ``coalesce(.., 0.0) + coalesce(.., 0.0)``), keys whose count
+reaches 0 drop out — and the whole view lands as ONE overwrite commit
+through the zero-job ``VersionedTable.append_rows``, fenced on the
+version the merge read so a lost race fails closed. A view above
+``DRIVER_ROW_BOUND`` rows raises: it is not keys-sized.
+
+The delta comes from the micro-batch itself on
+``StreamingViewMaintainer``'s fast path (the feed window is exactly the
+append the same call just committed; ``jobs.dual_sink`` has the batch
+cached), and from the typed change feed (``feed_delta``) for every
+other window: the replay gap after a crash between the fact and view
+commits, history that predates the view, and captured deletes, merges
+or compactions in the fact table.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from .versioned import VersionedTable
+
+# Largest result the engine holds on the driver: a maintained view
+# here, a complete-mode memory sink in streaming.jobs.
+DRIVER_ROW_BOUND = 100_000
 
 
 def feed_delta(feed: DataFrame, keys: list[str], measures: list[str]) -> DataFrame:
@@ -33,6 +47,76 @@ def feed_delta(feed: DataFrame, keys: list[str], measures: list[str]) -> DataFra
     return feed.groupBy(*keys).agg(*aggs)
 
 
+class _DriverView:
+    """The driver copy of a maintained view and its one landing path:
+    ``rows`` maps a key tuple (NULL is a key like any other) to
+    ``(n_rows, *sums)`` as of view ``version`` (None: not loaded)."""
+
+    def __init__(self, agg: VersionedTable, keys: list[str], measures: list[str]):
+        self.agg = agg
+        self.keys = keys
+        self.measures = measures
+        self.version: int | None = None
+        self.rows: dict[tuple, tuple] = {}
+
+    def _check_bound(self, n: int) -> None:
+        if n > DRIVER_ROW_BOUND:
+            raise RuntimeError(
+                f"maintained view {self.agg.root} holds {n} rows "
+                f"(> {DRIVER_ROW_BOUND}): its keys are not bounded — "
+                "aggregate on coarser keys"
+            )
+
+    def advance(
+        self, spark: SparkSession, delta: DataFrame, batch_id: int | None
+    ) -> int:
+        """Fold ``delta`` (keys, d_rows, d_<measure>...) into the view
+        and land it; returns the view's new version. A replayed
+        ``batch_id`` is a no-op."""
+        if batch_id is not None and batch_id in self.agg.committed_batch_ids():
+            self.version = None
+            return self.agg.latest_version()
+        head = -1 if (v := self.agg.latest_version()) is None else v
+        nk = len(self.keys)
+        if self.version != head:  # (re)load: one read of the view
+            self.version, self.rows = None, {}
+            if head >= 0:
+                self._check_bound(self.agg.count_rows(head))
+                sums = [f"sum_{m}" for m in self.measures]
+                snap = self.agg.read(spark, version=head)
+                for r in snap.select(*self.keys, "n_rows", *sums).collect():
+                    self.rows[tuple(r[:nk])] = tuple(r[nk:])
+            self.version = head
+        d_cols = ["d_rows", *[f"d_{m}" for m in self.measures]]
+        rows = dict(self.rows)
+        for r in delta.select(*self.keys, *d_cols).collect():
+            key = tuple(r[:nk])
+            cur = rows.get(key) or (0,) + (None,) * len(self.measures)
+            n = cur[0] + r[nk]
+            if n <= 0:
+                rows.pop(key, None)
+                continue
+            rows[key] = (n,) + tuple(
+                (0.0 if c is None else float(c)) + (0.0 if d is None else float(d))
+                for c, d in zip(cur[1:], r[nk + 1:])
+            )
+        self._check_bound(len(rows))
+        schema = StructType(
+            [StructField(k, delta.schema[k].dataType) for k in self.keys]
+            + [StructField("n_rows", LongType())]
+            + [StructField(f"sum_{m}", DoubleType()) for m in self.measures]
+        )
+        version = self.agg.append_rows(
+            [k + v for k, v in rows.items()],
+            schema,
+            batch_id=batch_id,
+            overwrite=True,
+            base_version=head,
+        )
+        self.version, self.rows = version, rows
+        return version
+
+
 def apply_delta(
     spark: SparkSession,
     agg_table: VersionedTable,
@@ -41,125 +125,21 @@ def apply_delta(
     measures: list[str],
     batch_id: int | None = None,
 ) -> int:
-    """Advance the materialized aggregate by ``delta`` (from
-    ``feed_delta``): existing keys are adjusted, new keys appear,
-    keys whose row count reaches zero are removed. A replayed
-    ``batch_id`` is a no-op (exactly-once maintenance on top of an
-    at-least-once feed consumer).
-
-    Work bound: the merge only COMPUTES rows for touched keys; the
-    aggregate table's copy-on-write upsert then rewrites that
-    keys-cardinality table — small by construction. The scale win is
-    that the FACT table is never rescanned: refresh cost follows the
-    feed window, not table size.
-
-    The aggregate schema is keys + n_rows + sum_<measure> per measure.
-    """
-    # every key join below is NULL-SAFE: NULL is a legal grouping-key
-    # value in the feed (GROUP BY treats it as its own group), and a
-    # plain equality join would orphan a NULL-key aggregate row (its
-    # delta never matches, the row lands in the gone-set every pass)
-    def _nullsafe_cond(left: str, right: str):
-        cond = None
-        for k in keys:
-            c = F.col(f"{left}.{k}").eqNullSafe(F.col(f"{right}.{k}"))
-            cond = c if cond is None else (cond & c)
-        return cond
-
-    have_versions = agg_table.versions()
-    if have_versions:
-        current = agg_table.read(spark).alias("cur")
-        d = delta.alias("d")
-        touched = current.join(
-            F.broadcast(d.select(*keys).alias("d")),
-            _nullsafe_cond("cur", "d"),
-            "semi",
-        ).alias("cur")
-        merged = (
-            touched.join(d, _nullsafe_cond("cur", "d"), "full_outer")
-            .select(
-                *[
-                    F.coalesce(F.col(f"cur.{k}"), F.col(f"d.{k}")).alias(k)
-                    for k in keys
-                ],
-                (
-                    F.coalesce(F.col("n_rows"), F.lit(0))
-                    + F.coalesce(F.col("d_rows"), F.lit(0))
-                ).alias("n_rows"),
-                *[
-                    (
-                        F.coalesce(F.col(f"sum_{m}"), F.lit(0.0))
-                        + F.coalesce(F.col(f"d_{m}"), F.lit(0.0))
-                    ).alias(f"sum_{m}")
-                    for m in measures
-                ],
-            )
-        )
-    else:
-        merged = delta.select(
-            *keys,
-            F.col("d_rows").alias("n_rows"),
-            *[F.col(f"d_{m}").alias(f"sum_{m}") for m in measures],
-        )
-    # zero-count keys vanish from the view (their sums are exactly the
-    # inserted-then-deleted rows' sums, i.e. 0 up to float association)
-    merged = merged.filter(F.col("n_rows") > 0)
-    if not have_versions:
-        return agg_table.append(merged, batch_id=batch_id)
-    version = agg_table.upsert(spark, merged, keys, batch_id=batch_id)
-    # keys that fell to zero were filtered OUT of the upsert batch, so
-    # they still hold stale rows — remove them in the same maintenance
-    # pass (only their file groups rewrite)
-    gone = (
-        delta.alias("d")
-        .join(merged.select(*keys).alias("m"), _nullsafe_cond("d", "m"), "left_anti")
-        .select(*keys)
-    )
-    gone_rows = gone.collect()  # touched-key cardinality, never fact rows
-    if gone_rows:
-        pred = " OR ".join(
-            "(" + " AND ".join(f"{k} <=> {_sql_lit(r[k])}" for k in keys) + ")"
-            for r in gone_rows
-        )
-        version = agg_table.delete_where(spark, pred)
-    return version
-
-
-def _sql_lit(v) -> str:
-    """Render a grouping-key value as a Spark SQL literal for the
-    null-safe (`<=>`) gone-key delete predicate. Supports the types a
-    grouping key can reasonably be; anything else raises rather than
-    emitting an unquoted token that F.expr would misparse as a column
-    reference."""
-    import datetime as _dt
-
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return "TRUE" if v else "FALSE"
-    if isinstance(v, str):
-        return "'" + v.replace("'", "''") + "'"
-    if isinstance(v, int) or isinstance(v, float):
-        return repr(v)
-    if isinstance(v, _dt.datetime):
-        return f"TIMESTAMP '{v.isoformat(sep=' ')}'"
-    if isinstance(v, _dt.date):
-        return f"DATE '{v.isoformat()}'"
-    raise TypeError(
-        f"unsupported grouping-key literal type {type(v).__name__}: {v!r}"
-    )
+    """Advance the aggregate by ``delta`` (from ``feed_delta``): keys
+    are adjusted, added, or removed when their row count reaches zero.
+    A replayed ``batch_id`` is a no-op (exactly-once maintenance on top
+    of an at-least-once feed consumer)."""
+    return _DriverView(agg_table, keys, measures).advance(spark, delta, batch_id)
 
 
 class StreamingViewMaintainer:
     """foreachBatch target: land each micro-batch into the FACT table
-    and advance the AGGREGATE from the typed change-feed window that
-    landing created — a streaming materialized view, exactly-once on
-    both tables. The consumed-feed watermark is durable: it is
-    recovered from the aggregate table's committed batch ids (each
-    maintenance step commits with batch_id = the fact version it
-    consumed up to), so a crash between the fact landing and the
-    maintenance step replays the maintenance, and a replayed
-    maintenance is a batch-id no-op."""
+    (with skipping stats on the columns its snapshot keeps them for,
+    ``upsert``'s rule) and advance the AGGREGATE by it — exactly-once
+    on both tables. The consumed-feed watermark is recovered from the
+    aggregate's batch ids (each view commit carries the fact version
+    it consumed up to), so a crash between the two commits replays
+    the maintenance from the change feed, and a replay is a no-op."""
 
     def __init__(
         self,
@@ -172,24 +152,43 @@ class StreamingViewMaintainer:
         self.agg = agg_table
         self.keys = keys
         self.measures = measures
+        self._view = _DriverView(agg_table, keys, measures)
         consumed = self.agg.committed_batch_ids()
         self._watermark = max(consumed) if consumed else -1
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        self.fact.append(batch_df, batch_id=batch_id)
+        spark = batch_df.sparkSession
+        nxt, _, stats = self.fact._snapshot_state()
+        kept = VersionedTable._pinned_stats_cols(stats) or []
+        self.fact.append(
+            batch_df,
+            batch_id=batch_id,
+            stats_cols=[c for c in kept if c in batch_df.columns] or None,
+        )
         to_v = self.fact.latest_version()
         if to_v is None or to_v <= self._watermark:
             return  # replayed batch landed nothing new
-        maintain_from_feed(
-            batch_df.sparkSession,
-            self.fact,
-            self.agg,
-            self.keys,
-            self.measures,
-            since_version=self._watermark,
-            to_version=to_v,
-        )
+        if self._own_append(batch_id, nxt, to_v):
+            delta = batch_df.groupBy(*self.keys).agg(
+                F.count(F.lit(1)).alias("d_rows"),
+                *[F.sum(m).alias(f"d_{m}") for m in self.measures],
+            )
+        else:
+            feed = self.fact.read_change_feed(spark, self._watermark, to_v)
+            delta = feed_delta(feed, self.keys, self.measures)
+        self._view.advance(spark, delta, to_v)
         self._watermark = to_v
+
+    def _own_append(self, batch_id: int, nxt: int, to_v: int) -> bool:
+        """``batch_df`` IS the feed window (watermark, to_v]: it is one
+        version, this call's append landed it at the slot it pinned (not
+        a replay no-op), and the batch frame carries every key and
+        measure (none is a generated column)."""
+        return (
+            to_v == self._watermark + 1 == nxt
+            and self.fact._load_record(to_v).get("batch_id") == batch_id
+            and not set(self.fact.generated_columns()) & {*self.keys, *self.measures}
+        )
 
 
 def maintain_from_feed(

@@ -41,6 +41,7 @@ within a snapshot.
 from __future__ import annotations
 
 import base64
+import datetime as _dt
 import hashlib
 import json
 import os
@@ -281,6 +282,31 @@ def _footer_rows(abs_dir: str) -> int:
             if fn.endswith(".parquet"):
                 total += pq.read_metadata(os.path.join(dirpath, fn)).num_rows
     return total
+
+
+def _as_datetime(col: str, v: object) -> _dt.datetime:
+    """A temporal prune bound or stat as a naive local datetime — the
+    form Spark collects timestamps in: ISO strings are parsed (the
+    manifest JSON-stringifies temporal stats), dates widen to
+    midnight (Spark's date-to-timestamp comparison), aware datetimes
+    move to local time. Anything else raises a ValueError naming the
+    column."""
+    if isinstance(v, str):
+        try:
+            v = _dt.datetime.fromisoformat(v)
+        except ValueError:
+            raise ValueError(
+                f"prune bound {v!r} for temporal column {col!r} is not "
+                "an ISO date or timestamp"
+            ) from None
+    if isinstance(v, _dt.datetime):
+        return v.astimezone().replace(tzinfo=None) if v.tzinfo else v
+    if isinstance(v, _dt.date):
+        return _dt.datetime.combine(v, _dt.time())
+    raise ValueError(
+        f"prune bound {v!r} for temporal column {col!r} is not a date, "
+        "datetime or ISO string"
+    )
 
 
 def _bloom_positions_py(value: object, m: int = _BLOOM_M, k: int = _BLOOM_K) -> list[int]:
@@ -2172,6 +2198,7 @@ class VersionedTable:
         write_retired: list | None = None,
         overwrite: bool = False,
         write_generated: dict | None = None,
+        base_version: int | None = None,
     ) -> int:
         """Publish PRE-STAGED file groups as one commit — the driver
         half of the native streaming sink (storage/stream_sink.py):
@@ -2195,7 +2222,13 @@ class VersionedTable:
         GENERATED columns are accepted only when ``write_generated``
         attests the staged files carry values computed for exactly
         the current definitions (the native sink's narrow arrow
-        evaluator — stream_sink._compile_generated)."""
+        evaluator — stream_sink._compile_generated).
+
+        ``base_version`` fences a commit derived from a snapshot the
+        caller read earlier (-1: the table was empty): if any commit
+        landed after it, the staged groups are dropped and
+        ``CommitConflictError`` raises instead of the blind re-pin —
+        a rows-from-a-stale-read overwrite must never win a race."""
         import shutil
 
         if self.check_constraints():
@@ -2225,6 +2258,14 @@ class VersionedTable:
             for g in groups:
                 shutil.rmtree(os.path.join(self.root, g), ignore_errors=True)
 
+        def _fence(version: int) -> None:
+            if base_version is not None and version != base_version + 1:
+                _drop_staged()
+                raise CommitConflictError(
+                    f"table {self.root} moved past version {base_version} "
+                    "while this commit's rows were derived from it"
+                )
+
         version, prev_files, prev_stats = self._snapshot_state()
         if batch_id is not None and batch_id in self.committed_batch_ids():
             _drop_staged()
@@ -2232,6 +2273,7 @@ class VersionedTable:
         incoming = StructType.fromJson(json.loads(incoming_schema_json))
         conflict: Exception | None = None
         for _ in range(10):
+            _fence(version)
             # mapping identity FIRST: after a rename, schema evolution
             # would also fail but with a misleading "physical name"
             # message — the actionable diagnosis is the mapping race
@@ -2283,7 +2325,7 @@ class VersionedTable:
 
     _LOCAL_ROW_TYPES = frozenset(
         {"byte", "short", "integer", "long", "float", "double", "string",
-         "boolean", "binary"}
+         "boolean", "binary", "date"}
     )
 
     def append_rows(
@@ -2293,6 +2335,7 @@ class VersionedTable:
         batch_id: int | None = None,
         stats_cols: list[str] | None = None,
         overwrite: bool = False,
+        base_version: int | None = None,
     ) -> int:
         """Land a SMALL driver-local row set as one commit with ZERO
         Spark jobs (round 15, guide §1.2 job-count): per-batch metrics
@@ -2308,14 +2351,18 @@ class VersionedTable:
         are all the already-tested ones.
 
         ``schema`` is a pyspark StructType of NON-TEMPORAL scalars or
-        arrays of them (the metrics/centroid-frame shapes;
-        timestamps/dates would need the session-zone negotiation the
-        Spark write path does, so they fail closed here). CHECK
-        constraints / generated columns are refused by commit_staged
-        (no SQL evaluator driver-side). ``overwrite=True`` publishes
-        as a truncating overwrite commit (the retrain-replace shape).
-        NOT for data frames: anything whose size scales with input
-        belongs on the distributed ``append`` path.
+        arrays of them (the metrics/centroid-frame shapes), plus DATE
+        columns (``datetime.date`` values; arrow date32 is zone-free).
+        Timestamps would need the session-zone negotiation the Spark
+        write path does, so they fail closed here. CHECK constraints /
+        generated columns are refused by commit_staged (no SQL
+        evaluator driver-side). ``overwrite=True`` publishes as a
+        truncating overwrite commit (the retrain-replace shape; the
+        maintained-view landing of storage/incremental.py), and
+        ``base_version`` fences it against the snapshot the rows were
+        derived from (see commit_staged). NOT for data frames:
+        anything whose size scales with input belongs on the
+        distributed ``append`` path.
         """
         import shutil as _shutil
 
@@ -2336,8 +2383,8 @@ class VersionedTable:
         bad = [f.name for f in schema.fields if not _local_ok(f.dataType)]
         if bad:
             raise TypeError(
-                f"append_rows supports non-temporal scalar columns only; "
-                f"{bad} are not (write via append)"
+                f"append_rows supports non-temporal scalar and date "
+                f"columns only; {bad} are not (write via append)"
             )
         if batch_id is not None and batch_id in self.committed_batch_ids():
             return self.latest_version()  # replay: no staging, no-op
@@ -2373,6 +2420,7 @@ class VersionedTable:
                 write_mapping=write_mapping,
                 write_retired=write_retired,
                 overwrite=overwrite,
+                base_version=base_version,
             )
         except Exception:
             # commit_staged's sanctioned failure paths drop staged
@@ -2681,17 +2729,37 @@ class VersionedTable:
                 )
 
             files = [f for f in files if bloom_may_contain(f)]
+        types = (
+            {
+                f.name: f.dataType.typeName()
+                for f in StructType.fromJson(json.loads(m["schema"])).fields
+            }
+            if preds
+            else {}
+        )
         for col, lo, hi in preds:
+            temporal = types.get(col) in ("date", "timestamp", "timestamp_ntz")
+            if temporal:
+                lo, hi = _as_datetime(col, lo), _as_datetime(col, hi)
 
             def overlaps(f: str, col=col, lo=lo, hi=hi) -> bool:
                 s = stats.get(f, {}).get(col)
                 if not s or s[0] is None or s[1] is None:
                     return True  # no stats -> can't prune safely
                 flo, fhi = s
-                # temporal stats were JSON-stringified; normalize the
-                # probe bounds the same way for a consistent ordering
-                qlo, qhi = (str(lo), str(hi)) if isinstance(flo, str) else (lo, hi)
-                return not (fhi < qlo or flo > qhi)
+                if temporal:
+                    # JSON-stringified once reloaded, date/datetime
+                    # objects on the committing handle: one ordering
+                    flo, fhi = _as_datetime(col, flo), _as_datetime(col, fhi)
+                elif isinstance(flo, str):
+                    lo, hi = str(lo), str(hi)
+                try:
+                    return not (fhi < lo or flo > hi)
+                except TypeError:
+                    raise ValueError(
+                        f"prune bounds ({lo!r}, {hi!r}) are not comparable "
+                        f"with the stats of column {col!r}"
+                    ) from None
 
             files = [f for f in files if overlaps(f)]
         return files

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..operators.flatten import flatten_packets
 from ..operators.normalize import normalize_flows
+from ..storage.incremental import DRIVER_ROW_BOUND
 
 
 def path1_normalize(raw: DataFrame) -> DataFrame:
@@ -107,7 +108,7 @@ def dual_sink(flows: DataFrame, cold_sink, hot_writer, checkpoint: str):
     )
 
 
-COMPLETE_MODE_ROW_BOUND = 100_000
+COMPLETE_MODE_ROW_BOUND = DRIVER_ROW_BOUND
 
 
 def run_to_memory(df: DataFrame, name: str, output_mode: str = "append"):
