@@ -1675,14 +1675,14 @@ def _storage_delta_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     the table is FORCED into delta mode (threshold 0, checkpoint every
     3 versions), so appends, a merge-on-read DV delete and a keyed
     upsert all publish O(change) delta records that every read must
-    materialize back through the checkpoint chain. The final snapshot
-    is hashed against the plain-SQL expectation — a diff/replay bug
+    replay forward from the nearest full record (every third version
+    here is written as a full manifest inline). The final snapshot is
+    hashed against the plain-SQL expectation — a diff/replay bug
     anywhere (files, stats, deletion vectors, schema carriage) shifts
-    rows and breaks the hash. At 100 TB this encoding is what keeps
-    per-commit metadata flat (~0.6 KB vs O(live groups) full
-    manifests; tools/delta_log_probe.py measures 425x at 2k groups).
-    Differential twin-table and fuzz coverage: tests/test_versioned.py
-    round-10 battery."""
+    rows and breaks the hash. This encoding keeps per-commit metadata
+    flat (~0.6 KB vs O(live groups) full manifests;
+    tools/delta_log_probe.py measures the full-vs-delta log growth).
+    Differential twin-table and fuzz coverage: tests/test_versioned.py."""
     from .storage.versioned import VersionedTable
 
     root = _run_tmp_root("netflow_vdl_") + "/t"

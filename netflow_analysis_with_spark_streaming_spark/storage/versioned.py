@@ -20,6 +20,12 @@ plain parquet + JSON, because the container ships no lakehouse jars:
   re-reads and retries (appends are order-independent, so a refreshed
   retry is always safe; replayed streaming batch ids resolve to
   no-ops on retry).
+- past ``_DELTA_LOG_MIN_FILES`` live groups a record is instead a
+  protocol-4 DELTA against its parent (O(change) bytes), with every
+  ``_CHECKPOINT_EVERY``-th record written as a full manifest inline;
+  ``_manifest`` replays a delta chain forward from the nearest full
+  record. The ``_log/NNNNNNNN.json`` records alone define every
+  snapshot — nothing else in ``_log`` is read.
 - time travel = read any old manifest; history() lists the log.
 - ``upsert`` is copy-on-write MERGE: current snapshot anti-joined on
   the key, unioned with the updates, written as a new snapshot — all
@@ -48,7 +54,6 @@ import os
 import shutil
 import time
 import uuid
-import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
@@ -106,90 +111,20 @@ _WRITER_VERSION_NO_MAPPING = 2
 # --- delta-encoded commit records (protocol 4) ---------------------------
 # FORMAT.md's "known scale trade-off": a full manifest lists the
 # snapshot's COMPLETE file-group set, so at N live groups every commit
-# writes O(N) metadata and the log grows O(N^2) — the 100 TB
-# bottleneck. Past _DELTA_LOG_MIN_FILES live groups, commits instead
-# write a DELTA record (adds/removes/stat+DV diffs against the parent
-# — O(change) bytes), with a FULL manifest checkpoint every
-# _CHECKPOINT_EVERY versions bounding read-side replay. Small tables
-# (and therefore protocol-2/3 readers of them) are untouched: below
-# the threshold every record is a full manifest, exactly as before.
+# writes O(N) metadata and the log grows O(N^2). Past
+# _DELTA_LOG_MIN_FILES live groups, commits instead write a DELTA
+# record (adds/removes/stat+DV diffs against the parent — O(change)
+# bytes), and every _CHECKPOINT_EVERY-th version writes its record as
+# a FULL manifest inline, bounding read-side replay. The records alone
+# define every snapshot. Small tables (and therefore protocol-2/3
+# readers of them) are untouched: below the threshold every record is
+# a full manifest.
 _DELTA_LOG_MIN_FILES = 64
 _CHECKPOINT_EVERY = 16
-# Deferred checkpoints (round 13): past this many live groups, the
-# every-16th-commit FULL checkpoint no longer rides the commit path —
-# measured 9.1 s / 125 MB at 1e6 groups (tools/delta_log_probe.py),
-# which blows any sub-10 s trigger cadence. Instead the checkpoint-due
-# commit writes its normal O(change) delta record and the full
-# snapshot lands OUT-OF-BAND as an idempotent SIDECAR file
-# (NNNNNNNN.ckpt.json — Delta Lake's post-commit N.checkpoint.parquet
-# analog), written by a daemon thread from the already-materialized
-# manifest. Readers use a sidecar as a replay base when present; a
-# crash that loses one only lengthens the replay chain (correctness
-# never depends on it). 200k groups ~ 1.5 s inline cost — the knee
-# where the stall starts to matter against streaming cadences.
-_CHECKPOINT_DEFER_FILES = 200_000
-# Sharded (multi-part) checkpoint sidecars (round 14): at 1e7 live
-# groups the SINGLE-FILE sidecar write measured 59 s / 1.27 GB
-# (tools/delta_log_probe.py --checkpoint-cost) — longer than the ~38 s
-# of hinted commits between two checkpoint triggers, so background
-# writers would back up without bound. Past ~_SIDECAR_PART_TARGET
-# live groups the snapshot therefore shards by crc32(group path) into
-# power-of-two part files (NNNNNNNN.ckpt.part-KKK.json — Delta's
-# multi-part N.checkpoint.K.M.parquet analog) under a small root
-# index, and a shard NO changed key maps to since the previous
-# sharded sidecar is HARD-LINKED from it instead of re-serialized
-# (changed keys come from the O(change) delta records in between) —
-# the background write drops from O(live groups) to O(change +
-# changed shards * target). The target sizes the REUSE granularity:
-# a steady ingest touches ~1-2 groups per commit (~16-32 keys per
-# checkpoint period), and rewrite cost is ~min(parts, changed keys) *
-# target — 32k groups/part (~4 MB JSON, Delta-checkpoint-part scale)
-# keeps that a few seconds at any table size while the 256-part cap
-# bounds file-count/assembly overhead (390k groups/part at 1e8 —
-# the coarse regime returns only past that).
-_SIDECAR_PART_TARGET = 32_000
-_SIDECAR_MAX_PARTS = 256
 # commits that may DELETE their own manifest on a detected race
 # (restore's vacuum-race rollback) must stay full: unlinking a delta
 # record a concurrent commit already chained on would orphan the chain
 _ALWAYS_FULL_ACTIONS = frozenset({"restore"})
-
-
-def _crc_file(path: str) -> int | None:
-    """crc32 of a file's bytes, or None if it vanished/unreadable —
-    the caller then simply omits the content check for that part."""
-    try:
-        with open(path, "rb") as f:
-            return zlib.crc32(f.read())
-    except OSError:
-        return None
-
-
-def _is_older(path: str, now: float, age_s: float) -> bool:
-    """mtime-age gate that treats a vanished file as NOT older (the
-    caller then leaves it alone — someone else already handled it)."""
-    try:
-        return now - os.path.getmtime(path) >= age_s
-    except OSError:
-        return False
-
-
-def _parse_sidecar_part_name(fn: str) -> int | None:
-    """Version of a ``NNNNNNNN.ckpt.part-KKK.json`` file name, or
-    None for anything else (shared by fsck's rootless-part report and
-    vacuum's debris sweep, so the two can never disagree on what a
-    part file is). Width-tolerant like the root-name parse: the
-    ``{version:08d}`` formatting WIDENS past 1e8 versions, and a part
-    the sweeps can't parse would leak forever."""
-    if not fn.endswith(".json"):
-        return None
-    stem = fn[: -len(".json")]
-    head, sep, tail = stem.partition(".ckpt.part-")
-    if not sep or not head.isdigit() or len(head) < 8:
-        return None
-    if len(tail) != 3 or not tail.isdigit():
-        return None
-    return int(head)
 
 
 def _stamp_protocol(
@@ -415,8 +350,6 @@ class VersionedTable:
         *,
         delta_log_min_files: int | None = None,
         checkpoint_every: int | None = None,
-        checkpoint_defer_files: int | None = None,
-        sidecar_part_target: int | None = None,
     ) -> None:
         self.root = resolve_table_root(root)
         root = self.root
@@ -438,39 +371,6 @@ class VersionedTable:
         self._ckpt_every = (
             _CHECKPOINT_EVERY if checkpoint_every is None else checkpoint_every
         )
-        # live-group count past which a due checkpoint defers to the
-        # out-of-band sidecar writer instead of stalling the commit
-        self._ckpt_defer = (
-            _CHECKPOINT_DEFER_FILES
-            if checkpoint_defer_files is None
-            else checkpoint_defer_files
-        )
-        # ~live groups per checkpoint-sidecar part file; a snapshot
-        # larger than one target shards into power-of-two parts with
-        # unchanged-shard hard-link reuse (WRITER-side only — readers
-        # assemble whatever part count the root index declares)
-        self._sidecar_target = (
-            _SIDECAR_PART_TARGET
-            if sidecar_part_target is None
-            else sidecar_part_target
-        )
-        # in-flight sidecar writers (daemon threads; tests, probes and
-        # vacuum join them via wait_for_checkpoint). A LIST, not a
-        # slot: at 1e6 groups a sidecar write (~5.5 s) outlives the 16
-        # hinted commits (~3 s) to the next deferral, so two writers
-        # can legitimately overlap — tracking only the newest would
-        # let vacuum doom a version whose sidecar lands afterwards
-        self._ckpt_threads: list = []
-        # newest version ever queued for a deferred sidecar write on
-        # this handle — the backlog cap in _sidecar_write_after
-        # compares against it so a writer lagging >= 2 checkpoint
-        # periods yields instead of pinning its manifest in memory
-        self._ckpt_queued_hwm = -1
-        # read-side sidecar kill-switch (ops/test hook). Integrity
-        # paths no longer toggle it — fsck and vacuum's floor rewrite
-        # replay chains through _pure_manifest, which never consults
-        # sidecars or mutates shared handle state.
-        self._use_sidecars = True
         # materialized-snapshot memo for delta chains (records are
         # immutable once published; vacuum's checkpoint rewrite
         # invalidates its entry explicitly)
@@ -524,64 +424,16 @@ class VersionedTable:
     def _manifest(self, version: int) -> dict:
         """The FULL materialized snapshot manifest of ``version``. For
         a full record this is the record itself; for a delta record
-        (protocol 4) the chain back to the nearest full checkpoint is
-        replayed forward — bounded by the checkpoint cadence, and
-        memoized per handle (records are immutable; the memo is
-        checked first, so hits skip the disk read). A vacuum racing
-        the chain walk can delete an ancestor AFTER rewriting the
-        oldest survivor as a full checkpoint — the walk then restarts
-        from the top record (now reachable through the rewritten
-        checkpoint); FileNotFoundError propagates only when the
-        version's OWN record is gone (genuinely vacuumed)."""
+        (protocol 4) ``_materialize`` replays the chain back to the
+        nearest full record. Memoized per handle (records are
+        immutable; the memo is checked first, so hits skip the disk
+        read). FileNotFoundError propagates when the version's OWN
+        record is gone (genuinely vacuumed)."""
         hit = self._mat_cache.get(version)
         if hit is not None:
             return hit
-        for _attempt in range(5):
-            rec = self._load_record(version)
-            if "delta_of" not in rec:
-                # memoize FULL records too (same bound as _materialize):
-                # repeated snapshot reads of a checkpoint version — or of
-                # any large-group table below the delta threshold — were
-                # re-reading and re-parsing the O(groups) JSON each time
-                # while delta records hit the memo
-                if len(self._mat_cache) > 8:
-                    self._mat_cache.clear()
-                self._mat_cache[version] = rec
-                return rec
-            side = self._load_ckpt_sidecar(version)
-            if side is not None:
-                # a deferred checkpoint landed for this exact version:
-                # the sidecar IS the materialized snapshot
-                if len(self._mat_cache) > 8:
-                    self._mat_cache.clear()
-                self._mat_cache[version] = side
-                return side
-            try:
-                return self._materialize(version, rec)
-            except FileNotFoundError:
-                continue  # ancestor vanished mid-walk: vacuum rewrote
-                # the floor checkpoint before deleting — restart from
-                # the top record, which now resolves through it
-        # persistent hole (crash mid-vacuum left a doomed suffix):
-        # surface the broken chain loudly
-        return self._materialize(version, self._load_record(version))
-
-    def _materialize(self, version: int, rec: dict) -> dict:
-        chain = [rec]
-        v = rec["delta_of"]
-        while True:
-            base = self._mat_cache.get(v)
-            if base is not None:
-                break  # a memoized snapshot is a valid replay base
-            base = self._load_ckpt_sidecar(v)
-            if base is not None:
-                break  # a deferred-checkpoint sidecar is a full snapshot
-            base = self._load_record(v)
-            if "delta_of" not in base:
-                break
-            chain.append(base)
-            v = base["delta_of"]
-        m = self._fold_chain(chain, base)
+        rec = self._load_record(version)
+        m = rec if "delta_of" not in rec else self._materialize(version, rec)
         # small bound: a materialized snapshot is O(live files) in
         # memory (10s of MB at 1e5 groups), and ascending walks only
         # need the immediate predecessor to stay O(1) per version —
@@ -592,61 +444,35 @@ class VersionedTable:
         self._mat_cache[version] = m
         return m
 
-    def _pure_manifest(self, version: int) -> dict:
-        """``version``'s FULL snapshot rebuilt by PURE chain replay —
-        no sidecars, no memo reads, no shared-state mutation. This is
-        the ground truth a sidecar must match (sidecars are an
-        acceleration, never an alternate truth): fsck diffs every
-        sidecar against it without toggling handle state a concurrent
-        reader could observe, and vacuum's floor-checkpoint rewrite
-        bakes THIS into the permanent record so a divergent-but-well-
-        formed sidecar can never be promoted to irrecoverable truth
-        when the chain behind it is deleted. Cost: O(chain back to
-        the nearest FULL on-disk record) — deferred checkpoints keep
-        their record a delta, so this can walk past them; acceptable
-        for the integrity/maintenance paths that call it.
-
-        Same concurrent-vacuum tolerance as _manifest: a CONCURRENT
-        vacuum can delete an ancestor mid-walk after rewriting the
-        floor checkpoint — restart from the top record, which now
-        resolves through the rewritten full record. Only a version
-        whose OWN record is gone (genuinely vacuumed) or a torn chain
-        that persists across retries surfaces an error."""
-        rec = self._load_record(version)
-        if "delta_of" not in rec:
-            return rec
-        for _ in range(5):
-            chain = [rec]
-            v = rec["delta_of"]
+    def _materialize(self, version: int, rec: dict) -> dict:
+        """Replay ``version``'s delta record ``rec`` forward from the
+        nearest full record (or memoized snapshot) behind it — the one
+        chain walk every reader, vacuum and the floor-checkpoint
+        rewrite share. A vacuum racing the walk can delete an ancestor
+        AFTER rewriting the oldest survivor as a full checkpoint: the
+        walk then restarts from a re-read top record, which now
+        resolves through the rewritten checkpoint. A hole that
+        persists across retries (a crash mid-vacuum left a doomed
+        suffix) surfaces as FileNotFoundError."""
+        for attempt in range(6):
+            chain, base = [], rec
             try:
-                while True:
-                    base = self._load_record(v)
-                    if "delta_of" not in base:
-                        break
+                while "delta_of" in base:
                     chain.append(base)
                     v = base["delta_of"]
-            except FileNotFoundError:
-                continue  # ancestor vanished mid-walk: restart
-            return self._fold_chain(chain, base)
-        # persistent hole (crash mid-vacuum left a doomed suffix):
-        # surface the broken chain loudly
-        chain = [rec]
-        v = rec["delta_of"]
-        while True:
-            base = self._load_record(v)
-            if "delta_of" not in base:
+                    base = self._mat_cache.get(v) or self._load_record(v)
                 break
-            chain.append(base)
-            v = base["delta_of"]
-        return self._fold_chain(chain, base)
+            except FileNotFoundError:
+                if attempt == 5:
+                    raise
+                rec = self._load_record(version)
+        return self._fold_chain(chain, base) if chain else base
 
     @staticmethod
     def _fold_chain(chain: list, base: dict) -> dict:
         """Fold delta records (newest-first ``chain``) onto a FULL
         ``base`` snapshot, returning the top version's materialized
-        manifest. Pure function of its inputs — shared by the memoized
-        read path (_materialize) and the pure-replay integrity path
-        (_pure_manifest)."""
+        manifest. Pure function of its inputs."""
         files = set(base["files"])
         stats = dict(base.get("stats") or {})
         dvs = {g: list(x) for g, x in (base.get("dvs") or {}).items()}
@@ -826,26 +652,7 @@ class VersionedTable:
         provenance: dict | None = None,
         column_mapping: dict[str, str] | None = None,
         retired_physical: list[str] | None = None,
-        adds_hint: list[str] | None = None,
     ) -> int:
-        """``adds_hint`` (round 12): the APPEND-SHAPED fast path.
-        A caller that KNOWS this commit only adds ``adds_hint`` to the
-        parent's live set declares it, and the commit skips every
-        O(live groups) STRING pass: the DV live-set rebuild, the
-        stats/fileset filter, and _encode_delta_record's three set
-        diffs all become O(change). The hint contract is STRUCTURAL
-        and CHECKED: ``files`` must be the parent's manifest file list
-        followed by exactly ``adds_hint`` (prefix/tail pointer-equality
-        + disjointness bisect — a wrong hint raises instead of
-        corrupting the delta chain), and the committed stats are
-        DERIVED as parent entries + the adds' entries from ``stats``
-        (a mutated surviving entry is ignored whole, never
-        half-applied into a memo/record split-brain). Equivalence with
-        the re-diff encoder is differentially fuzzed in
-        tests/test_versioned.py. This is what makes a steady-state
-        streaming commit O(change) CPU at 1e5+ live groups (measured:
-        tools/delta_log_probe.py --checkpoint-cost), not just
-        O(change) bytes."""
         if version is None:
             version = (self.latest_version() + 1) if self.versions() else 0
         # one materialized parent read serves DV inheritance, mapping
@@ -877,68 +684,17 @@ class VersionedTable:
         # resurrect deleted rows. `inherit_dvs=False` is for restore,
         # which must adopt the TARGET snapshot's DV set verbatim.
         merged_dvs: dict[str, list[str]] = {}
-        if adds_hint is not None and not inherit_dvs:
-            # restore-style commits adopt a target DV set verbatim —
-            # the parent's entries are implicitly DROPPED, which the
-            # O(change) encoder cannot express (it emits no dvs_del).
-            # No caller combines these; fail closed if one ever does.
-            raise ValueError(
-                "adds_hint requires inherit_dvs=True (an append-shaped "
-                "commit carries the parent's deletion vectors forward)"
-            )
-        if adds_hint is not None:
-            # validate the hint BEFORE trusting it anywhere — ALSO on
-            # a parentless slot (version 0 / rollback-vacated parent),
-            # where fail-open would silently drop un-hinted files'
-            # stats. The contract is STRUCTURAL: ``files`` must be the
-            # parent's manifest file list (empty for a parentless
-            # commit) followed by exactly ``adds_hint``, in that
-            # order, adds absent from the parent. The prefix/tail
-            # equality is O(N) POINTER compares (callers pass the
-            # memoized parent list itself) and alone pins the length
-            # arithmetic; the disjointness bisect is O(change · log N)
-            # — together they make 'files == parent ∪ adds' a checked
-            # fact, not a trusted claim, so a wrong hint raises
-            # instead of splitting the warm memo from what cold
-            # readers materialize out of the delta chain.
-            import bisect as _bisect
-
-            plist = prev_m.get("files") or []
-            for a in adds_hint:
-                i = _bisect.bisect_left(plist, a)
-                if i < len(plist) and plist[i] == a:
-                    raise ValueError(
-                        f"adds_hint names already-live file {a!r} — the "
-                        "commit is not append-shaped; drop the hint"
-                    )
-            if (
-                len(set(adds_hint)) != len(adds_hint)
-                or files[: len(plist)] != plist
-                or files[len(plist) :] != list(adds_hint)
-            ):
-                raise ValueError(
-                    "adds_hint is not structurally append-shaped: files "
-                    "must be the parent's manifest file list followed by "
-                    f"exactly the {len(adds_hint)} hinted adds "
-                    f"(parent {len(plist)}, got {len(files)} files)"
-                )
         if inherit_dvs and prev_m:
             prev_dvs = prev_m.get("dvs") or {}
             if prev_dvs:
-                if adds_hint is not None:
-                    # append-shaped: every parent group stays live, so
-                    # inheritance is a verbatim copy — no O(files)
-                    # live-set rebuild
-                    merged_dvs = {g: list(v) for g, v in prev_dvs.items()}
-                else:
-                    # the live-group set costs O(files) string splits —
-                    # only pay it when there ARE vectors to carry
-                    # (profiled at 0.1 s/commit on a DV-free 131k-group
-                    # ingest table)
-                    live = {self._group_of(f) for f in files}
-                    merged_dvs = {
-                        g: list(v) for g, v in prev_dvs.items() if g in live
-                    }
+                # the live-group set costs O(files) string splits —
+                # only pay it when there ARE vectors to carry
+                # (profiled at 0.1 s/commit on a DV-free 131k-group
+                # ingest table)
+                live = {self._group_of(f) for f in files}
+                merged_dvs = {
+                    g: list(v) for g, v in prev_dvs.items() if g in live
+                }
         for g, v in (dvs or {}).items():
             merged_dvs.setdefault(g, []).extend(v)
         # Column mapping rides the manifest like DVs do: inherited
@@ -954,25 +710,8 @@ class VersionedTable:
             retired_physical = list(prev_m.get("retired_physical") or [])
         # hoisted: inside the stats comprehension below, `set(files)`
         # would rebuild per ITEM — O(groups^2) string hashing on every
-        # commit (measured 0.3 s/commit at 3.3k groups; minutes at the
-        # 1e5-group target scale). With a VALIDATED adds_hint the
-        # filter is replaced by DERIVATION: the committed stats are the
-        # parent's entries (manifest invariant: live-scoped) plus the
-        # adds' entries read from ``stats`` — by construction the memo,
-        # the delta record's stats_set, and a cold materialization all
-        # agree, even against a caller that mutated a surviving entry
-        # in its passed dict (such a mutation is NOT append-shaped and
-        # is ignored, not half-applied).
-        if adds_hint is not None:
-            hs = stats or {}
-            hinted_stats = {
-                **(prev_m.get("stats") or {}),
-                **{f: hs[f] for f in adds_hint if f in hs},
-            }
-            fileset = None
-        else:
-            hinted_stats = None
-            fileset = set(files)
+        # commit (measured 0.3 s/commit at 3.3k groups)
+        fileset = set(files)
         manifest = {
             "version": version,
             # readers at a lower protocol refuse this manifest; the
@@ -1001,11 +740,7 @@ class VersionedTable:
             # data-skipping index: {file: {col: [min, max]}} — what
             # Delta/Iceberg keep per data file; lets read() prune file
             # groups without opening them
-            "stats": (
-                hinted_stats
-                if adds_hint is not None
-                else {f: s for f, s in (stats or {}).items() if f in fileset}
-            ),
+            "stats": {f: s for f, s in (stats or {}).items() if f in fileset},
             # optional change-capture group ("changes/<uuid>"): the
             # rows this commit REMOVED, for CDF consumers
             "changes": changes,
@@ -1028,28 +763,14 @@ class VersionedTable:
         # _ckpt_every versions to bound read-side replay. Small tables
         # always write full manifests (and keep protocol <= 3).
         record = manifest
-        defer_ckpt = False
         if (
             prev_m
             and action not in _ALWAYS_FULL_ACTIONS
             and len(files) >= self._delta_min
             and self._ckpt_every > 0
+            and version % self._ckpt_every != 0
         ):
-            due = (version % self._ckpt_every) == 0
-            if due and len(files) >= self._ckpt_defer:
-                # deferred checkpoint: the full snapshot would stall
-                # this commit O(live groups) (9.1 s at 1e6 — above
-                # streaming cadences); write the O(change) record now
-                # and the sidecar out-of-band after the fence
-                defer_ckpt = True
-            if not due or defer_ckpt:
-                record = (
-                    self._encode_delta_record_appended(
-                        manifest, adds_hint, dvs or {}
-                    )
-                    if adds_hint is not None
-                    else self._encode_delta_record(manifest, prev_m)
-                )
+            record = self._encode_delta_record(manifest, prev_m)
         tmp = os.path.join(self._log, f".tmp-{uuid.uuid4().hex}.json")
         with open(tmp, "w", encoding="utf-8") as f:
             json.dump(record, f, default=str)
@@ -1074,7 +795,7 @@ class VersionedTable:
         # on this handle reads its parent from memory instead of
         # re-loading and re-materializing the record chain (profiled
         # at ~0.25 s/commit of JSON parse + set/sort replay at 131k
-        # groups); same bound discipline as _materialize
+        # groups); same bound discipline as _manifest
         if record is not manifest:
             # delta-encoded: a cold materialization reports the
             # RECORD's protocol stamp — keep warm and cold identical
@@ -1082,398 +803,7 @@ class VersionedTable:
         if len(self._mat_cache) > 8:
             self._mat_cache.clear()
         self._mat_cache[version] = manifest
-        if defer_ckpt:
-            # post-commit checkpoint (Delta's N.checkpoint analog):
-            # serialize the manifest we ALREADY materialized — no
-            # re-read, no replay — off the commit path. The dict is
-            # immutable once memoized (later commits build fresh
-            # dicts from it), so the concurrent read is safe; a crash
-            # before the sidecar lands only lengthens cold replay.
-            import threading
-
-            # chain behind this handle's still-running sidecar
-            # writers (round 14): the sharded writer link-reuses from
-            # the PREVIOUS sidecar, which must be fully published
-            # (root last) before the next one scans for a donor — and
-            # serializing also keeps a slow O(N) write from fanning
-            # out into concurrent full serializations when checkpoints
-            # trigger faster than one write completes
-            prev = [t for t in self._ckpt_threads if t.is_alive()]
-            th = threading.Thread(
-                target=self._sidecar_write_after,
-                args=(version, manifest, prev),
-                daemon=True,
-            )
-            self._ckpt_threads = prev + [th]
-            self._ckpt_queued_hwm = version  # backlog-cap watermark
-            th.start()
         return version
-
-    # --- deferred checkpoint sidecars (round 13) ---------------------------
-
-    def _sidecar_path(self, version: int) -> str:
-        return os.path.join(self._log, f"{version:08d}.ckpt.json")
-
-    def _sidecar_part_path(self, version: int, k: int) -> str:
-        return os.path.join(
-            self._log, f"{version:08d}.ckpt.part-{k:03d}.json"
-        )
-
-    @staticmethod
-    def _sidecar_shard(key: str, parts: int) -> int:
-        """Stable shard assignment for a group path / stats key / DV
-        key — crc32, NOT Python hash() (which is salted per process;
-        link-reuse needs every writer to agree on the partition)."""
-        return zlib.crc32(key.encode("utf-8")) % parts
-
-    def _sidecar_part_count(
-        self, n_files: int, prev_parts: int | None = None
-    ) -> int:
-        """Power-of-two part count targeting ~_sidecar_target groups
-        per part. When the PREVIOUS sharded sidecar's count is within
-        one band (x2 either way) of the computed one, keep it — a
-        table hovering at a band edge would otherwise flip counts
-        between consecutive checkpoints and forfeit all link reuse."""
-        need = max(1, -(-n_files // self._sidecar_target))
-        p = 1
-        while p < need and p < _SIDECAR_MAX_PARTS:
-            p *= 2
-        if prev_parts and p // 2 <= prev_parts <= p * 2:
-            return prev_parts
-        return p
-
-    def _load_ckpt_sidecar(self, version: int) -> dict | None:
-        """The version's checkpoint sidecar as a FULL manifest dict,
-        or None when absent/unreadable. A torn sidecar is impossible
-        (tmp + atomic link), but a half-vacuumed or hand-damaged one
-        must degrade to chain replay, not crash the read path."""
-        if not self._use_sidecars:
-            return None
-        try:
-            with open(self._sidecar_path(version), encoding="utf-8") as f:
-                m = json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError, OSError):
-            return None
-        if m.get("version") != version or "delta_of" in m:
-            return None  # mislabeled — ignore, the chain is the truth
-        if m.get("writer_version", 1) > _WRITER_VERSION:
-            # a sidecar is an ACCELERATION, never an alternate truth:
-            # unlike a future-protocol commit record (whose semantics
-            # the version genuinely depends on — _load_record fails
-            # closed), a future sidecar can simply be ignored and the
-            # chain replayed; the chain's own records still protocol-
-            # gate the read. fsck reports it as an issue.
-            return None
-        if "ckpt_parts" in m:
-            # sharded (multi-part) sidecar: the root is an index; the
-            # snapshot's files/stats/dvs live in the part files
-            return self._assemble_sidecar_parts(m, version)
-        return m
-
-    def _assemble_sidecar_parts(
-        self, root: dict, version: int
-    ) -> dict | None:
-        """Reassemble a sharded sidecar's FULL manifest from its part
-        files, or None when any part is missing/unreadable or the
-        assembled snapshot fails the root's own n_files stamp — the
-        reader then degrades to pure chain replay (a sidecar is an
-        acceleration, never an alternate truth)."""
-        parts = root.get("ckpt_parts")
-        if not isinstance(parts, int) or not (
-            1 <= parts <= _SIDECAR_MAX_PARTS
-        ):
-            return None
-        crcs = root.get("part_crcs")
-        if not (isinstance(crcs, list) and len(crcs) == parts):
-            crcs = None
-        files: list = []
-        stats: dict = {}
-        dvs: dict = {}
-        for k in range(parts):
-            try:
-                with open(self._sidecar_part_path(version, k), "rb") as f:
-                    raw = f.read()
-                # content check BEFORE parse: hard-link reuse shares
-                # one inode across sidecar generations, so a single
-                # rotted part would otherwise silently corrupt every
-                # generation that linked it
-                if (
-                    crcs is not None
-                    and crcs[k] is not None
-                    and zlib.crc32(raw) != crcs[k]
-                ):
-                    return None
-                sh = json.loads(raw)
-            except (FileNotFoundError, json.JSONDecodeError, OSError,
-                    UnicodeDecodeError):
-                return None
-            files.extend(sh.get("files") or ())
-            stats.update(sh.get("stats") or {})
-            dvs.update(sh.get("dvs") or {})
-        if root.get("n_files") is not None and root["n_files"] != len(files):
-            return None  # torn/mixed parts: replay is the truth
-        m = {
-            k: v
-            for k, v in root.items()
-            if k not in ("ckpt_parts", "part_crcs")
-        }
-        m["files"] = sorted(files)
-        m["stats"] = stats
-        m["dvs"] = dvs
-        return m
-
-    def _changed_keys_since(
-        self, prev_version: int, version: int
-    ) -> set | None:
-        """Every group path / stats key / DV key touched by the delta
-        records in (prev_version, version] — the exact key set whose
-        shards a sharded sidecar must re-serialize; every other shard
-        is byte-reusable from the previous sidecar. None when any
-        record in the range is missing or not a delta (restore /
-        vacuum floor rewrites are full records with no diff basis) —
-        the writer then serializes every shard fresh."""
-        keys: set = set()
-        for u in range(prev_version + 1, version + 1):
-            try:
-                r = self._load_record(u)
-            except (FileNotFoundError, ValueError, json.JSONDecodeError,
-                    OSError):
-                return None
-            if r.get("delta_of") != u - 1:
-                return None
-            keys.update(r.get("add_files") or ())
-            keys.update(r.get("remove_files") or ())
-            keys.update((r.get("stats_set") or {}).keys())
-            keys.update(r.get("stats_del") or ())
-            keys.update((r.get("dvs_set") or {}).keys())
-            keys.update(r.get("dvs_del") or ())
-        return keys
-
-    def _latest_sharded_sidecar(
-        self, before: int
-    ) -> tuple[int, int, list | None] | tuple[None, None, None]:
-        """(version, part count, recorded part crcs) of the newest
-        sharded sidecar older than ``before`` — the link-reuse donor
-        — or (None, None, None). The crcs let a linking writer stamp
-        its root without re-reading the donor's bytes."""
-        best = None
-        try:
-            names = os.listdir(self._log)
-        except OSError:
-            return (None, None, None)
-        for fn in names:
-            if not (
-                fn.endswith(".ckpt.json")
-                and fn[: -len(".ckpt.json")].isdigit()
-            ):
-                continue
-            sv = int(fn[: -len(".ckpt.json")])
-            if sv < before and (best is None or sv > best):
-                best = sv
-        if best is None:
-            return (None, None, None)
-        try:
-            with open(self._sidecar_path(best), encoding="utf-8") as f:
-                root = json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError, OSError):
-            return (None, None, None)
-        parts = root.get("ckpt_parts")
-        if (
-            root.get("version") == best
-            and isinstance(parts, int)
-            and 1 <= parts <= _SIDECAR_MAX_PARTS
-        ):
-            crcs = root.get("part_crcs")
-            if not (isinstance(crcs, list) and len(crcs) == parts):
-                crcs = None
-            return (best, parts, crcs)
-        return (None, None, None)
-
-    def _sidecar_write_after(
-        self, version: int, manifest: dict, prev_threads: list
-    ) -> None:
-        """Deferred-sidecar thread body: drain the handle's earlier
-        writers, then publish — so sidecars land in version order and
-        the sharded writer always sees its donor fully published.
-
-        Backlog cap: each queued writer pins its O(live groups)
-        manifest dict, so a commit burst outrunning the write rate
-        would otherwise grow memory without bound. A sidecar is an
-        ACCELERATION — skipping one only lengthens replay until the
-        next lands, and the next writer's donor lookup and
-        changed-key diff are donor-version-relative, so gaps are
-        harmless. A writer that finds itself >= 2 checkpoint periods
-        behind the newest queued one therefore yields to it."""
-        for t in prev_threads:
-            t.join()
-        behind = self._ckpt_queued_hwm - version
-        if self._ckpt_every > 0 and behind >= 2 * self._ckpt_every:
-            return
-        self._write_checkpoint_sidecar(version, manifest)
-
-    def _write_checkpoint_sidecar(self, version: int, manifest: dict) -> None:
-        """Idempotent atomic publish of ``version``'s full snapshot as
-        a sidecar. Concurrent/duplicate writers race benignly: the
-        content is semantically deterministic per version, EEXIST
-        means someone already landed it.
-
-        Snapshots larger than one part target shard by
-        crc32(key) % parts into NNNNNNNN.ckpt.part-KKK.json files
-        under a small root index written LAST (readers enter only
-        through the root, so a crash mid-parts leaves inert part
-        files — vacuum sweeps them). A shard none of the delta
-        records since the previous sharded sidecar touched is
-        HARD-LINKED from that sidecar's same-index part instead of
-        re-serialized: the background write is then O(change +
-        changed shards), not O(live groups) — at 1e7 groups the
-        single-file form measured 59 s, past the ~38 s of commits
-        between checkpoint triggers, i.e. writer backlog."""
-        target = self._sidecar_path(version)
-        if os.path.exists(target):
-            return
-        files = manifest["files"]
-        prev_v, prev_parts, prev_crcs = self._latest_sharded_sidecar(version)
-        parts = self._sidecar_part_count(len(files), prev_parts)
-        if parts <= 1:
-            tmp = os.path.join(
-                self._log, f".tmp-{uuid.uuid4().hex}.ckpt.json"
-            )
-            try:
-                with open(tmp, "w", encoding="utf-8") as f:
-                    json.dump(manifest, f, default=str)
-                os.link(tmp, target)
-            except FileExistsError:
-                pass
-            finally:
-                try:
-                    os.unlink(tmp)
-                except FileNotFoundError:
-                    pass
-            return
-        changed_shards: set | None = None
-        if prev_v is not None and prev_parts == parts:
-            keys = self._changed_keys_since(prev_v, version)
-            if keys is not None:
-                changed_shards = {
-                    self._sidecar_shard(k, parts) for k in keys
-                }
-        # phase 1 — LINK the unchanged shards first, so the bucketing
-        # walk below only has to build the shards actually being
-        # serialized (O(change + changed shards), not O(live groups);
-        # the walk still routes every key, but skips the dict inserts
-        # for ~all of them in steady state). part_crcs records each
-        # part's content crc32 in the root so assembly can reject
-        # single-part bit rot — essential with links, where one
-        # rotted inode is shared by every subsequent generation that
-        # reused it (round-13's independent serializations confined
-        # rot to one version; the checksum restores that isolation).
-        part_crcs: list = [None] * parts
-        to_build = (
-            set(range(parts))
-            if changed_shards is None
-            else set(changed_shards)
-        )
-        if changed_shards is not None:
-            for k in range(parts):
-                if k in to_build:
-                    continue
-                pt = self._sidecar_part_path(version, k)
-                if os.path.exists(pt):
-                    part_crcs[k] = _crc_file(pt)
-                    continue  # a concurrent writer landed this part
-                try:
-                    os.link(self._sidecar_part_path(prev_v, k), pt)
-                    part_crcs[k] = (
-                        prev_crcs[k]
-                        if prev_crcs is not None and prev_crcs[k] is not None
-                        else _crc_file(pt)
-                    )
-                except (FileExistsError, OSError):
-                    if os.path.exists(pt):
-                        part_crcs[k] = _crc_file(pt)
-                    else:
-                        to_build.add(k)  # donor vanished: build fresh
-        # phase 2 — ONE bucketing walk, building only the needed shards
-        shards: dict[int, dict] = {
-            k: {"files": [], "stats": {}, "dvs": {}} for k in to_build
-        }
-        for f in files:
-            sh = shards.get(self._sidecar_shard(f, parts))
-            if sh is not None:
-                sh["files"].append(f)
-        for f, s in (manifest.get("stats") or {}).items():
-            sh = shards.get(self._sidecar_shard(f, parts))
-            if sh is not None:
-                sh["stats"][f] = s
-        for g, x in (manifest.get("dvs") or {}).items():
-            sh = shards.get(self._sidecar_shard(g, parts))
-            if sh is not None:
-                sh["dvs"][g] = x
-        for k in sorted(to_build):
-            pt = self._sidecar_part_path(version, k)
-            if os.path.exists(pt):
-                part_crcs[k] = _crc_file(pt)
-                continue
-            data = json.dumps(shards[k], default=str).encode("utf-8")
-            tmp = os.path.join(
-                self._log, f".tmp-{uuid.uuid4().hex}.ckpt.json"
-            )
-            try:
-                with open(tmp, "wb") as f:
-                    f.write(data)
-                os.link(tmp, pt)
-                part_crcs[k] = zlib.crc32(data)
-            except FileExistsError:
-                part_crcs[k] = _crc_file(pt)
-            finally:
-                try:
-                    os.unlink(tmp)
-                except FileNotFoundError:
-                    pass
-        root = {
-            k: v
-            for k, v in manifest.items()
-            if k not in ("files", "stats", "dvs")
-        }
-        root["ckpt_parts"] = parts
-        root["part_crcs"] = part_crcs
-        tmp = os.path.join(self._log, f".tmp-{uuid.uuid4().hex}.ckpt.json")
-        try:
-            with open(tmp, "w", encoding="utf-8") as f:
-                json.dump(root, f, default=str)
-            os.link(tmp, target)
-        except FileExistsError:
-            pass
-        finally:
-            try:
-                os.unlink(tmp)
-            except FileNotFoundError:
-                pass
-
-    def wait_for_checkpoint(self, timeout: float | None = None) -> None:
-        """Join EVERY in-flight sidecar writer — determinism hook for
-        tests, probes, vacuum, and orderly shutdown. ``timeout``
-        applies per thread."""
-        for th in self._ckpt_threads:
-            if th.is_alive():
-                th.join(timeout)
-        self._ckpt_threads = [t for t in self._ckpt_threads if t.is_alive()]
-
-    def write_checkpoint(self, version: int | None = None) -> str | None:
-        """Maintenance API: materialize ``version`` (default latest)
-        and publish its checkpoint sidecar synchronously. Returns the
-        sidecar path, or None for an empty table or a version whose
-        record is already a full manifest (a sidecar would duplicate
-        it byte-for-byte for zero replay benefit)."""
-        if version is None:
-            version = self.latest_version()
-            if version is None:
-                return None
-        rec = self._load_record(version)
-        if "delta_of" not in rec:
-            return None
-        self._write_checkpoint_sidecar(version, self._manifest(version))
-        return self._sidecar_path(version)
 
     @staticmethod
     def _encode_delta_record(full: dict, prev: dict) -> dict:
@@ -1519,44 +849,6 @@ class VersionedTable:
                 g: v for g, v in cur_dvs.items() if prev_dvs.get(g) != v
             },
             "dvs_del": sorted(g for g in prev_dvs if g not in cur_dvs),
-        }
-        for k in ("column_mapping", "retired_physical", "provenance"):
-            if k in full:
-                rec[k] = full[k]
-        return rec
-
-    @staticmethod
-    def _encode_delta_record_appended(
-        full: dict, adds: list[str], new_dvs: dict[str, list[str]]
-    ) -> dict:
-        """O(change) twin of ``_encode_delta_record`` for VALIDATED
-        append-shaped commits (``adds_hint``): nothing was removed and
-        no surviving stat entry changed, so the diff IS the adds list
-        — no parent set constructions, no full-stats walk. The record
-        is semantically identical to the re-diff encoder's (same
-        fields, same values; JSON key order may differ) — fuzzed
-        equivalent in tests; materialization cannot tell them apart."""
-        cur_stats = full["stats"]
-        cur_dvs = full["dvs"]
-        rec = {
-            "version": full["version"],
-            "writer_version": _WRITER_VERSION,  # delta needs protocol 4
-            "ts": full["ts"],
-            "action": full["action"],
-            "delta_of": full["version"] - 1,
-            "add_files": sorted(adds),
-            "remove_files": [],
-            "n_files": full["n_files"],
-            "schema": full["schema"],
-            "batch_id": full["batch_id"],
-            "changes": full["changes"],
-            "stats_set": {f: cur_stats[f] for f in sorted(adds) if f in cur_stats},
-            "stats_del": [],
-            # explicit per-commit DVs are the only entries that can
-            # differ from the parent on an append-shaped commit (the
-            # inherited set is a verbatim copy)
-            "dvs_set": {g: cur_dvs[g] for g in sorted(new_dvs) if g in cur_dvs},
-            "dvs_del": [],
         }
         for k in ("column_mapping", "retired_physical", "provenance"):
             if k in full:
@@ -2158,7 +1450,6 @@ class VersionedTable:
                     batch_id,
                     stats={**prev_stats, **new_stats},
                     version=version,
-                    adds_hint=new,
                 )
             except CommitConflictError as e:
                 if batch_id is not None and batch_id in self.committed_batch_ids():
@@ -2313,7 +1604,6 @@ class VersionedTable:
                     batch_id,
                     stats={**prev_stats, **stats},
                     version=version,
-                    adds_hint=list(groups),
                 )
             except CommitConflictError as e:
                 if batch_id is not None and batch_id in self.committed_batch_ids():
@@ -5365,8 +4655,7 @@ class VersionedTable:
         # copy-on-write (see the bloom insert) — mutating a shared
         # nested dict (a) silently edits the parent snapshot in memory,
         # (b) makes the delta encoder's parent diff read "unchanged" so
-        # the commit record OMITS the change and cold replay loses it,
-        # and (c) races the deferred-sidecar writer's json.dump.
+        # the commit record OMITS the change and cold replay loses it.
         # Pinned by test_analyze_second_bloom_column_survives_cold_
         # delta_replay.
         new_stats = {f: dict(prev_stats.get(f, {})) for f in prev_files}
@@ -5649,75 +4938,6 @@ class VersionedTable:
                 for d in lst:
                     if not os.path.exists(os.path.join(self.root, d)):
                         issues.append(f"manifest {v}: missing dv group {d}")
-        # deferred-checkpoint sidecars: each must belong to a live
-        # version and match the snapshot a PURE chain replay rebuilds
-        # (a sidecar is an acceleration, never an alternate truth)
-        live = set(self.versions())
-        for fn in sorted(os.listdir(self._log)):
-            if not (fn.endswith(".ckpt.json") and fn[: -len(".ckpt.json")].isdigit()):
-                continue
-            sv = int(fn[: -len(".ckpt.json")])
-            if sv not in live:
-                issues.append(f"checkpoint sidecar {sv}: orphaned (no record)")
-                continue
-            # ONE raw parse, then the same gates _load_ckpt_sidecar
-            # applies — fsck reports the distinct reason for each
-            # (the read path just ignores any of them)
-            try:
-                with open(os.path.join(self._log, fn), encoding="utf-8") as f:
-                    side = json.load(f)
-            except (json.JSONDecodeError, OSError):
-                issues.append(f"checkpoint sidecar {sv}: unreadable")
-                continue
-            if side.get("writer_version", 1) > _WRITER_VERSION:
-                issues.append(
-                    f"checkpoint sidecar {sv}: future protocol "
-                    f"{side.get('writer_version')} (ignored by reads; "
-                    "upgrade or delete it)"
-                )
-                continue
-            if side.get("version") != sv or "delta_of" in side:
-                issues.append(f"checkpoint sidecar {sv}: mislabeled")
-                continue
-            if "ckpt_parts" in side:
-                # sharded sidecar: the root is an index — reassemble
-                # through the same helper the read path uses, so fsck
-                # validates exactly what a reader would consume
-                assembled = self._assemble_sidecar_parts(side, sv)
-                if assembled is None:
-                    issues.append(
-                        f"checkpoint sidecar {sv}: part files missing, "
-                        "unreadable, or inconsistent with the root "
-                        "index (reads degrade to chain replay)"
-                    )
-                    continue
-                side = assembled
-            # pure chain replay through a private helper — fsck used
-            # to toggle self._use_sidecars + clear the memo, which a
-            # concurrent reader on the same handle (e.g. a streaming
-            # feed thread) could observe mid-toggle
-            truth = self._pure_manifest(sv)
-            for k in ("files", "n_files", "stats", "dvs", "schema"):
-                if side.get(k) != truth.get(k):
-                    issues.append(
-                        f"checkpoint sidecar {sv}: {k} diverges from "
-                        "chain replay"
-                    )
-        # rootless checkpoint parts: a crash between the part writes
-        # and the root link (or a sweep that removed only the root)
-        # leaves part files no reader will ever consult. Inert, but
-        # surfaced so vacuum's debris sweep is auditable. NOTE: a
-        # deferred sidecar landing CONCURRENTLY with fsck can report
-        # here transiently — its root links last by design.
-        for fn in sorted(os.listdir(self._log)):
-            pv = _parse_sidecar_part_name(fn)
-            if pv is None:
-                continue
-            if not os.path.exists(self._sidecar_path(pv)):
-                issues.append(
-                    f"checkpoint part {fn}: no root sidecar "
-                    "(crashed or half-swept write; vacuum removes it)"
-                )
         return issues
 
     def vacuum(
@@ -5782,27 +5002,9 @@ class VersionedTable:
         # clustered/z-ordered appends, subpaths ("data/{group}/_rb=N") —
         # normalize every kept path to its first two components so a group
         # survives if ANY kept manifest references anything under it.
-        #
-        # The keep-set is computed by PURE chain replay, never through
-        # the sidecar-preferring _manifest(): a divergent-but-well-
-        # formed sidecar (the exact corruption fsck detects) that
-        # dropped files would otherwise shrink the keep-set and make
-        # vacuum DELETE LIVE DATA. One O(chain) replay materializes
-        # the floor; each later kept version folds its own delta on
-        # top (delta_of is always version-1), so the walk is O(total
-        # records), not O(kept × chain).
         keep = set()
-        m = None
-        prev_v = None
         for v in kept_versions:
-            rec = self._load_record(v)
-            if "delta_of" not in rec:
-                m = rec
-            elif m is not None and rec["delta_of"] == prev_v:
-                m = self._fold_chain([rec], m)
-            else:
-                m = self._pure_manifest(v)
-            prev_v = v
+            m = self._manifest(v)
             for f in m["files"]:
                 keep.add("/".join(f.split("/")[:2]))
             if m.get("changes"):
@@ -5836,10 +5038,6 @@ class VersionedTable:
                     shutil.rmtree(path, ignore_errors=True)
                 removed += 1
         if not dry_run:
-            # join our own in-flight sidecar writer first: a deferred
-            # checkpoint landing AFTER the removal pass below would
-            # orphan a sidecar for a version this vacuum just doomed
-            self.wait_for_checkpoint()
             kept_set = set(kept_versions)
             doomed = [v for v in vs if v not in kept_set]
             if doomed:
@@ -5851,71 +5049,8 @@ class VersionedTable:
                 # this see either the delta (ancestors still present —
                 # deletion happens after) or the full record.
                 self._checkpoint_record(min(kept_set))
-            part_files: dict[int, list[str]] = {}
-            for fn in os.listdir(self._log):
-                pv = _parse_sidecar_part_name(fn)
-                if pv is not None:
-                    part_files.setdefault(pv, []).append(fn)
             for v in doomed:
                 os.remove(os.path.join(self._log, f"{v:08d}.json"))
-                # a doomed version's deferred-checkpoint sidecar ages
-                # out with its record (surviving sidecars stay — they
-                # accelerate replay for kept versions). Part files go
-                # with their root; hard links shared with a SURVIVING
-                # sidecar's parts are independent directory entries,
-                # so unlinking here never damages the survivor.
-                try:
-                    os.remove(self._sidecar_path(v))
-                except FileNotFoundError:
-                    pass
-                for fn in part_files.get(v, ()):
-                    try:
-                        os.remove(os.path.join(self._log, fn))
-                    except FileNotFoundError:
-                        pass
-            # orphan-sidecar sweep: a SECOND handle/process whose
-            # deferred sidecar landed after a past vacuum's removal
-            # pass leaves a .ckpt.json with no record — inert for
-            # reads, but fsck would report it forever. Existence of
-            # the record file is re-checked per sidecar (not against
-            # a stale version listing) so a sidecar for a version
-            # committed mid-sweep is never touched: its record became
-            # visible BEFORE its sidecar thread spawned.
-            for fn in os.listdir(self._log):
-                if not (
-                    fn.endswith(".ckpt.json")
-                    and fn[: -len(".ckpt.json")].isdigit()
-                ):
-                    continue
-                sv = int(fn[: -len(".ckpt.json")])
-                if not os.path.exists(
-                    os.path.join(self._log, f"{sv:08d}.json")
-                ):
-                    try:
-                        os.remove(os.path.join(self._log, fn))
-                    except FileNotFoundError:
-                        pass
-            # part-file debris sweep: (a) parts whose RECORD is gone
-            # age out like their root above; (b) parts whose record
-            # survives but whose root never landed are a crashed
-            # writer's leftovers — removable once older than
-            # min_age_s (a LIVE deferred write links its root last,
-            # so a younger rootless part may be mid-publish)
-            now2 = time.time()
-            for fn in os.listdir(self._log):
-                pv = _parse_sidecar_part_name(fn)
-                if pv is None:
-                    continue
-                path = os.path.join(self._log, fn)
-                record_gone = not os.path.exists(
-                    os.path.join(self._log, f"{pv:08d}.json")
-                )
-                rootless = not os.path.exists(self._sidecar_path(pv))
-                if record_gone or (rootless and _is_older(path, now2, min_age_s)):
-                    try:
-                        os.remove(path)
-                    except FileNotFoundError:
-                        pass
         return removed
 
     def _checkpoint_record(self, version: int) -> None:
@@ -5930,12 +5065,7 @@ class VersionedTable:
             return
         if "delta_of" not in rec:
             return
-        # PURE chain replay, not _manifest(): _manifest prefers the
-        # .ckpt.json sidecar, and baking a divergent-but-well-formed
-        # sidecar (the exact corruption fsck detects) into the
-        # permanent record right before vacuum deletes the chain
-        # behind it would promote the sidecar to irrecoverable truth
-        full = dict(self._pure_manifest(version))
+        full = dict(self._manifest(version))
         # a full manifest needs only the protocol its FEATURES need
         full["writer_version"] = _stamp_protocol(
             full.get("column_mapping"), full.get("retired_physical")
@@ -5945,19 +5075,6 @@ class VersionedTable:
             json.dump(full, f, default=str)
         os.replace(tmp, os.path.join(self._log, f"{version:08d}.json"))
         self._mat_cache.pop(version, None)
-        # the record is now full — a sidecar for it is a byte-for-byte
-        # duplicate with zero replay benefit; drop it (its part files
-        # too, or they'd linger as rootless debris until a sweep)
-        try:
-            os.remove(self._sidecar_path(version))
-        except FileNotFoundError:
-            pass
-        for fn in os.listdir(self._log):
-            if _parse_sidecar_part_name(fn) == version:
-                try:
-                    os.remove(os.path.join(self._log, fn))
-                except FileNotFoundError:
-                    pass
 
     # --- streaming integration --------------------------------------------
 

@@ -20,13 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.flatten import flatten_packets
-from ..operators.normalize import normalize_flows
 from ..storage.incremental import DRIVER_ROW_BOUND
-
-
-def path1_normalize(raw: DataFrame) -> DataFrame:
-    """E1 transformation: raw JSON value column -> Schema B flows."""
-    return normalize_flows(raw)
 
 
 def path2_flatten(nested: DataFrame) -> DataFrame:
@@ -108,9 +102,6 @@ def dual_sink(flows: DataFrame, cold_sink, hot_writer, checkpoint: str):
     )
 
 
-COMPLETE_MODE_ROW_BOUND = DRIVER_ROW_BOUND
-
-
 def run_to_memory(df: DataFrame, name: str, output_mode: str = "append"):
     """Deterministic test/driver execution: availableNow trigger into
     a memory sink, blocking until the backlog drains. Returns the
@@ -122,7 +113,7 @@ def run_to_memory(df: DataFrame, name: str, output_mode: str = "append"):
     keys; unbounded keys at production scale belong in append/update
     mode landed through a foreachBatch sink, see
     queries_streaming._fold_update_mode). Enforced: a complete-mode
-    result larger than COMPLETE_MODE_ROW_BOUND raises instead of
+    result larger than DRIVER_ROW_BOUND raises instead of
     silently growing driver state.
     """
     q = (
@@ -135,10 +126,10 @@ def run_to_memory(df: DataFrame, name: str, output_mode: str = "append"):
     q.awaitTermination()
     if output_mode == "complete":
         n = df.sparkSession.table(name).count()
-        if n > COMPLETE_MODE_ROW_BOUND:
+        if n > DRIVER_ROW_BOUND:
             raise RuntimeError(
                 f"complete-mode memory sink '{name}' materialized {n} rows "
-                f"(> {COMPLETE_MODE_ROW_BOUND}): key cardinality is not "
+                f"(> {DRIVER_ROW_BOUND}): key cardinality is not "
                 "bounded — use append/update mode with a foreachBatch sink"
             )
     return q

@@ -10,6 +10,7 @@ import pyspark.sql.functions as F
 
 from conftest import SF_ORACLE
 
+from netflow_analysis_with_spark_streaming_spark.operators.normalize import normalize_flows
 from netflow_analysis_with_spark_streaming_spark.schemas import FLOW_RAW
 from netflow_analysis_with_spark_streaming_spark.streaming import jobs, sinks, sources
 
@@ -45,7 +46,7 @@ def test_file_source_normalize_end_to_end(spark, tmp_path):
     path, total = _write_json_files(tmp_path)
     raw = sources.json_file_source(spark, path, FLOW_RAW, max_files_per_trigger=1)
     assert raw.isStreaming
-    flows = jobs.path1_normalize(
+    flows = normalize_flows(
         raw.select(F.to_json(F.struct(*raw.columns)).alias("value"))
     )
     jobs.run_to_memory(flows, "t_norm")
@@ -280,7 +281,7 @@ def test_dual_sink_feeds_hot_and_cold(spark, tmp_path):
     exactly once (the reference consumed the topic twice)."""
     path, total = _write_json_files(tmp_path, n_files=2)
     raw = sources.json_file_source(spark, path, FLOW_RAW, max_files_per_trigger=1)
-    flows = jobs.path1_normalize(
+    flows = normalize_flows(
         raw.select(F.to_json(F.struct(*raw.columns)).alias("value"))
     )
     cold = sinks.IdempotentParquetSink(str(tmp_path / "cold"))
@@ -746,10 +747,10 @@ def test_complete_mode_row_bound_enforced(spark, tmp_path, monkeypatch):
         spark, str(d), spark.createDataFrame([], "k long").schema
     )
     agg = raw.groupBy("k").count()
-    monkeypatch.setattr(jobs, "COMPLETE_MODE_ROW_BOUND", 10)
+    monkeypatch.setattr(jobs, "DRIVER_ROW_BOUND", 10)
     with pytest.raises(RuntimeError, match="key cardinality"):
         jobs.run_to_memory(agg, "t_bound_trip", output_mode="complete")
-    monkeypatch.setattr(jobs, "COMPLETE_MODE_ROW_BOUND", 1000)
+    monkeypatch.setattr(jobs, "DRIVER_ROW_BOUND", 1000)
     jobs.run_to_memory(agg, "t_bound_ok", output_mode="complete")
     assert spark.table("t_bound_ok").count() == 50
 

@@ -5153,24 +5153,21 @@ def test_concurrent_vacuum_stress(spark, tmp_path):
     assert got == set(rows.items())
 
 
-def test_commit_adds_hint_equivalent_to_rediff(tmp_path):
-    """The O(change) append-shaped commit path (adds_hint, round 12)
-    is differentially fuzzed against the re-diff encoder: the SAME
-    randomized commit sequence driven through both paths yields
-    semantically identical on-disk records (parsed equality modulo
-    the wall-clock stamp) and identical materialized snapshots at
-    every version — including across full-checkpoint versions, DV
-    carriage, and the protocol-2 -> 4 flip."""
+def test_commit_memo_matches_cold_replay(tmp_path):
+    """The snapshot a committing handle memoizes for each version it
+    publishes equals what a fresh handle materializes from the log —
+    over a randomized append sequence with random deletion vectors,
+    across the full-checkpoint versions and the protocol-2 -> 4 flip."""
     import random
 
     from pyspark.sql.types import LongType, StructField, StructType
 
     schema_json = StructType([StructField("k", LongType())]).json()
     rng = random.Random(12)
-    a = VersionedTable(str(tmp_path / "hint"), delta_log_min_files=4)
-    b = VersionedTable(str(tmp_path / "diff"), delta_log_min_files=4)
+    t = VersionedTable(str(tmp_path / "t"), delta_log_min_files=4)
     files: list[str] = []
     stats: dict = {}
+    warm: dict[int, dict] = {}
     for v in range(40):
         adds = [f"data/g{v:03d}_{j}" for j in range(rng.randint(1, 3))]
         for g in adds:
@@ -5179,159 +5176,22 @@ def test_commit_adds_hint_equivalent_to_rediff(tmp_path):
         dvs = (
             {adds[0]: [f"dv/d{v:03d}"]} if rng.random() < 0.3 else None
         )
-        a._commit(
-            list(files),
-            "append",
-            schema_json,
-            stats=dict(stats),
-            dvs=dvs,
-            adds_hint=list(adds),
-        )
-        b._commit(
+        t._commit(
             list(files), "append", schema_json, stats=dict(stats), dvs=dvs
         )
-
-    def norm(rec: dict) -> dict:
-        rec = dict(rec)
-        rec.pop("ts", None)
-        return rec
-
+        warm[v] = t._manifest(v)
+    assert warm[0]["writer_version"] == 2 and warm[39]["writer_version"] == 4
+    assert any(warm[v]["dvs"] for v in range(40))
     for v in range(40):
-        assert norm(a._load_record(v)) == norm(b._load_record(v)), v
-        ma, mb = norm(a._manifest(v)), norm(b._manifest(v))
-        assert ma == mb, v
+        assert VersionedTable(t.root)._manifest(v) == warm[v], v
     # (no fsck here: the groups are synthetic metadata-only paths —
     # real-data fsck coverage rides every append/commit_staged test)
 
 
-def test_commit_adds_hint_validation_fails_closed(tmp_path):
-    """A WRONG adds_hint raises before anything is published: an add
-    already live in the parent, or a count that doesn't balance, is a
-    caller bug that would otherwise corrupt the delta chain."""
-    import pytest as _p
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    schema_json = StructType([StructField("k", LongType())]).json()
-    t = VersionedTable(str(tmp_path / "t"), delta_log_min_files=1)
-    t._commit(["data/g0"], "append", schema_json, stats={})
-    with _p.raises(ValueError, match="already-live"):
-        t._commit(
-            ["data/g0", "data/g1"],
-            "append",
-            schema_json,
-            stats={},
-            adds_hint=["data/g0"],
-        )
-    with _p.raises(ValueError, match="not structurally append-shaped"):
-        t._commit(
-            ["data/g0", "data/g1"],
-            "append",
-            schema_json,
-            stats={},
-            adds_hint=["data/g1", "data/g2"],
-        )
-    # the resurrect-and-swap shape (counts balance, adds disjoint, but
-    # a parent file dropped and an un-hinted file slipped in) — the
-    # class the structural prefix/tail check exists to catch
-    with _p.raises(ValueError, match="not structurally append-shaped"):
-        t._commit(
-            ["data/gX", "data/g1"],
-            "append",
-            schema_json,
-            stats={},
-            adds_hint=["data/g1"],
-        )
-    # nothing was published by the failed attempts
-    assert t.latest_version() == 0
+# --- delta-log checkpoints and chain replay ----------------------------------
 
 
-def test_commit_adds_hint_ignores_mutated_surviving_stats(tmp_path):
-    """A caller that mutates a SURVIVING file's stats entry in its
-    passed dict is not append-shaped: the mutation is ignored WHOLE
-    (committed stats derive from the parent + the adds' entries), so
-    the warm memo, the delta record, and a cold materialization all
-    agree — never a half-applied split-brain."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    schema_json = StructType([StructField("k", LongType())]).json()
-    t = VersionedTable(str(tmp_path / "t"), delta_log_min_files=1)
-    t._commit(
-        ["data/g0"], "append", schema_json, stats={"data/g0": {"k": [0, 9]}}
-    )
-    t._commit(
-        ["data/g0", "data/g1"],
-        "append",
-        schema_json,
-        stats={"data/g0": {"k": [999, 999]}, "data/g1": {"k": [10, 19]}},
-        adds_hint=["data/g1"],
-    )
-    # warm memo and a cold handle agree: parent entry inherited intact
-    for handle in (t, VersionedTable(str(tmp_path / "t"))):
-        m = handle._manifest(1)
-        assert m["stats"]["data/g0"] == {"k": [0, 9]}
-        assert m["stats"]["data/g1"] == {"k": [10, 19]}
-
-
-def test_commit_adds_hint_refuses_uninherited_dvs(tmp_path):
-    """adds_hint + inherit_dvs=False fails closed: dropping the
-    parent's DV set is not append-shaped, and the O(change) encoder
-    emits no dvs_del — a silent combination would resurrect deleted
-    rows in the delta chain."""
-    import pytest as _p
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    schema_json = StructType([StructField("k", LongType())]).json()
-    t = VersionedTable(str(tmp_path / "t"), delta_log_min_files=1)
-    t._commit(["data/g0"], "append", schema_json, stats={})
-    with _p.raises(ValueError, match="inherit_dvs"):
-        t._commit(
-            ["data/g0", "data/g1"],
-            "append",
-            schema_json,
-            stats={},
-            inherit_dvs=False,
-            adds_hint=["data/g1"],
-        )
-
-
-def test_commit_adds_hint_validates_on_parentless_slot(tmp_path):
-    """The structural check also runs when there is NO parent manifest
-    (version 0): a hinted commit whose files exceed its adds would
-    otherwise silently drop the un-hinted files' stats (fail-open).
-    With an exact hint the parentless commit works and keeps every
-    stats entry."""
-    import pytest as _p
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    schema_json = StructType([StructField("k", LongType())]).json()
-    t = VersionedTable(str(tmp_path / "t"))
-    with _p.raises(ValueError, match="not structurally append-shaped"):
-        t._commit(
-            ["data/a", "data/b"],
-            "append",
-            schema_json,
-            stats={"data/a": {"k": [0, 1]}, "data/b": {"k": [2, 3]}},
-            adds_hint=["data/b"],
-        )
-    assert t.latest_version() is None
-    v = t._commit(
-        ["data/a", "data/b"],
-        "append",
-        schema_json,
-        stats={"data/a": {"k": [0, 1]}, "data/b": {"k": [2, 3]}},
-        adds_hint=["data/a", "data/b"],
-    )
-    m = t._manifest(v)
-    assert set(m["stats"]) == {"data/a", "data/b"}
-
-
-# --- deferred checkpoint sidecars (round 13) --------------------------------
-
-
-def _mk_meta_table(tmp_path, name, n_commits, **kw):
+def _mk_meta_table(tmp_path, name, n_commits):
     """Metadata-only table driven through _commit: one synthetic group
     per version (the delta_log_probe shape)."""
     from pyspark.sql.types import LongType, StructField, StructType
@@ -5339,7 +5199,7 @@ def _mk_meta_table(tmp_path, name, n_commits, **kw):
     import os
 
     schema_json = StructType([StructField("k", LongType())]).json()
-    t = VersionedTable(str(tmp_path / name), delta_log_min_files=4, **kw)
+    t = VersionedTable(str(tmp_path / name), delta_log_min_files=4)
     files, stats = [], {}
     for v in range(n_commits):
         g = f"data/g{v:04d}"
@@ -5352,102 +5212,23 @@ def _mk_meta_table(tmp_path, name, n_commits, **kw):
     return t
 
 
-def test_deferred_checkpoint_writes_delta_plus_sidecar(tmp_path):
-    """Past checkpoint_defer_files, the every-16th commit stays
-    O(change) on disk (a delta record) and the FULL snapshot lands as
-    the idempotent .ckpt.json sidecar — content-identical to what an
-    inline checkpoint would have written."""
-    t = _mk_meta_table(tmp_path, "t", 33, checkpoint_defer_files=8)
-    t.wait_for_checkpoint()
+def test_delta_log_checkpoints_inline(tmp_path):
+    """Past delta_log_min_files, every 16th record (versions 16 and 32)
+    is a FULL manifest written inline by its own commit, every other
+    record is a delta, and _log holds nothing but NNNNNNNN.json
+    records."""
+    import os
+
+    t = _mk_meta_table(tmp_path, "t", 33)
     for v in (16, 32):
         rec = t._load_record(v)
-        assert "delta_of" in rec, f"v{v} record should be a delta"
-        import os
-
-        assert os.path.exists(t._sidecar_path(v)), f"v{v} sidecar missing"
-        side = t._load_ckpt_sidecar(v)
-        assert side["version"] == v
-        assert side["files"] == t._manifest(v)["files"]
-    # the small-table behavior is untouched: no deferral config ->
-    # inline full checkpoint, no sidecar
-    u = _mk_meta_table(tmp_path, "u", 17)
-    rec = u._load_record(16)
-    assert "delta_of" not in rec
-    import os
-
-    assert not os.path.exists(u._sidecar_path(16))
-
-
-def test_sidecar_loss_degrades_to_chain_replay(tmp_path):
-    """Crash tolerance: deleting every sidecar only lengthens the
-    replay chain — cold reads rebuild the exact snapshot from the
-    delta records alone (correctness never depends on a sidecar)."""
-    import os
-
-    t = _mk_meta_table(tmp_path, "t", 40, checkpoint_defer_files=8)
-    t.wait_for_checkpoint()
-    expect = t._manifest(39)
-    for v in (16, 32):
-        os.remove(t._sidecar_path(v))
-    cold = VersionedTable(t.root)
-    m = cold._manifest(39)
-    assert m["files"] == expect["files"]
-    assert m["stats"] == expect["stats"]
-    assert cold.fsck() == []
-
-
-def test_sidecar_accelerates_cold_reads_and_fsck_verifies_it(tmp_path):
-    """A cold handle materializes a version PAST a deferred checkpoint
-    through the sidecar (never replaying beneath it), fsck validates
-    every sidecar against pure chain replay, and a corrupted sidecar
-    is both detected by fsck and ignored by the read path."""
-    import json as _json
-    import os
-
-    t = _mk_meta_table(tmp_path, "t", 20, checkpoint_defer_files=8)
-    t.wait_for_checkpoint()
-    assert t.fsck() == []
-    cold = VersionedTable(t.root)
-    m = cold._manifest(19)
-    assert m["files"] == t._manifest(19)["files"]
-    # wrong content, right shape: fsck flags it, reads fall back
-    side = _json.load(open(t._sidecar_path(16)))
-    side["files"] = side["files"][:-1]
-    side["n_files"] -= 1
-    os.remove(t._sidecar_path(16))
-    with open(t._sidecar_path(16), "w") as f:
-        _json.dump(side, f)
-    issues = VersionedTable(t.root).fsck()
-    assert any("sidecar 16" in i and "diverges" in i for i in issues)
-
-
-def test_write_checkpoint_is_idempotent_and_skips_full_records(tmp_path):
-    import os
-
-    t = _mk_meta_table(tmp_path, "t", 18, checkpoint_defer_files=8)
-    t.wait_for_checkpoint()
-    p1 = t.write_checkpoint(16)
-    p2 = t.write_checkpoint(16)
-    assert p1 == p2 == t._sidecar_path(16)
-    # a full record never needs a sidecar
-    assert t.write_checkpoint(0) is None
-    # maintenance call on an arbitrary delta version works too
-    p = t.write_checkpoint(9)
-    assert p is not None and os.path.exists(p)
-    assert t.fsck() == []
-
-
-def test_vacuum_removes_doomed_sidecars(tmp_path):
-    import os
-
-    t = _mk_meta_table(tmp_path, "t", 40, checkpoint_defer_files=8)
-    t.wait_for_checkpoint()
-    assert os.path.exists(t._sidecar_path(16))
-    t.vacuum(keep_last=5, min_age_s=0)
-    assert not os.path.exists(t._sidecar_path(16))
-    assert not os.path.exists(t._sidecar_path(32))  # floor rewrite dropped it
+        assert "delta_of" not in rec, f"v{v} record should be full"
+        assert rec["n_files"] == len(rec["files"]) == v + 1
+    assert all(
+        "delta_of" in t._load_record(v) for v in range(4, 33) if v % 16
+    )
+    assert sorted(os.listdir(t._log)) == [f"{v:08d}.json" for v in range(33)]
     assert VersionedTable(t.root).fsck() == []
-    assert VersionedTable(t.root)._manifest(39)["n_files"] == 40
 
 
 def test_analyze_second_bloom_column_survives_cold_delta_replay(
@@ -5458,8 +5239,7 @@ def test_analyze_second_bloom_column_survives_cold_delta_replay(
     so adding a SECOND bloom column mutated the parent snapshot in
     place — the delta encoder's parent diff then read 'unchanged' and
     the commit record OMITTED the new blooms, silently losing the
-    index on any cold chain replay (and racing the deferred-sidecar
-    writer's json.dump). Pin: on a delta-encoded table that already
+    index on any cold chain replay. Pin: on a delta-encoded table that already
     carries blooms for k, analyze(bloom_cols=['v']) must survive a
     COLD handle's materialization, and the parent version must NOT
     grow the new column."""
@@ -5491,50 +5271,6 @@ def test_analyze_second_bloom_column_survives_cold_delta_replay(
     assert t.fsck() == []
 
 
-def test_wait_for_checkpoint_joins_every_inflight_writer(tmp_path):
-    """Regression (round-13 review): only the NEWEST sidecar thread
-    was tracked, so an older still-running writer escaped
-    wait_for_checkpoint()/vacuum's join — vacuum could doom a version
-    whose sidecar lands afterwards, leaving an fsck-visible orphan.
-    Pin: with artificially slow writers, two deferred checkpoints
-    overlap and wait_for_checkpoint() returns only after BOTH
-    sidecars are on disk."""
-    import os
-    import threading
-    import time
-
-    t = _mk_meta_table(tmp_path, "t", 15, checkpoint_defer_files=8)
-    started = threading.Event()
-    orig = VersionedTable._write_checkpoint_sidecar
-
-    def slow(self, version, manifest):
-        started.set()
-        time.sleep(0.8)
-        orig(self, version, manifest)
-
-    VersionedTable._write_checkpoint_sidecar = slow
-    try:
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        schema_json = StructType([StructField("k", LongType())]).json()
-        files = [f"data/g{v:04d}" for v in range(15)]
-        stats = {g: {"k": [0, 9], "__rows__": 10} for g in files}
-        for v in range(15, 33):  # crosses checkpoints 16 AND 32
-            g = f"data/g{v:04d}"
-            os.makedirs(os.path.join(t.root, g), exist_ok=True)
-            files.append(g)
-            stats[g] = {"k": [0, 9], "__rows__": 10}
-            t._commit(list(files), "append", schema_json, stats=dict(stats))
-        assert started.wait(5.0)
-        assert len([th for th in t._ckpt_threads if th.is_alive()]) >= 1
-        t.wait_for_checkpoint()
-    finally:
-        VersionedTable._write_checkpoint_sidecar = orig
-    for v in (16, 32):
-        assert os.path.exists(t._sidecar_path(v)), v
-    assert t.fsck() == []
-
-
 def test_raw_uri_root_resolves_to_the_same_table(spark, tmp_path, monkeypatch):
     """VERDICT r13: ``VersionedTable("file:///x/t")`` used to create a
     literal ``file:/`` junk tree under the CWD and read as an EMPTY
@@ -5561,220 +5297,44 @@ def test_raw_uri_root_resolves_to_the_same_table(spark, tmp_path, monkeypatch):
 
 
 def test_vacuum_floor_rewrite_ignores_divergent_sidecar(tmp_path):
-    """ADVICE r13 (medium): vacuum's floor rewrite used _manifest(),
-    which prefers the .ckpt.json sidecar — a divergent but well-formed
-    sidecar (the exact corruption fsck detects) was promoted to
-    irrecoverable truth the moment vacuum deleted the chain behind it.
-    The rewrite now replays the pure chain (_pure_manifest): the
-    rewritten full record must match the CHAIN, not the bad sidecar."""
+    """A table written by an older build may hold ``.ckpt.json``
+    checkpoint sidecars next to its records. Nothing reads them: the
+    vacuum floor rewrite bakes the CHAIN's snapshot into the permanent
+    record even when a leftover sidecar for that version is divergent
+    but well-formed, and cold reads and fsck ignore the file."""
     import json as _json
     import os
 
-    t = _mk_meta_table(tmp_path, "t", 40, checkpoint_defer_files=8)
-    t.wait_for_checkpoint()
-    truth_files = t._pure_manifest(32)["files"]
-    # corrupt v32's sidecar: wrong content, right shape
-    side = _json.load(open(t._sidecar_path(32)))
-    side["files"] = side["files"][:-3]
-    side["n_files"] -= 3
-    with open(t._sidecar_path(32), "w") as f:
+    t = _mk_meta_table(tmp_path, "t", 40)
+    truth = VersionedTable(t.root)._manifest(33)
+    assert "delta_of" in t._load_record(33)
+    # leftover sidecar for v33: wrong content, right shape
+    side = dict(truth, files=truth["files"][:-3], n_files=truth["n_files"] - 3)
+    with open(os.path.join(t._log, "00000033.ckpt.json"), "w") as f:
         _json.dump(side, f)
-    # vacuum so v32 becomes the floor survivor (keep_last=8 keeps 32..39)
-    fresh = VersionedTable(t.root)
-    fresh.vacuum(keep_last=8, min_age_s=0)
-    rewritten = VersionedTable(t.root)._load_record(32)
+    # vacuum so v33 becomes the floor survivor (keep_last=7 keeps 33..39)
+    VersionedTable(t.root).vacuum(keep_last=7, min_age_s=0)
+    rewritten = VersionedTable(t.root)._load_record(33)
     assert "delta_of" not in rewritten
-    assert rewritten["files"] == truth_files  # chain truth, not sidecar
+    assert rewritten["files"] == truth["files"]  # chain truth, not sidecar
+    assert VersionedTable(t.root)._manifest(39)["n_files"] == 40
     assert VersionedTable(t.root).fsck() == []
-
-
-def test_vacuum_sweeps_orphan_sidecars(tmp_path):
-    """ADVICE r13 (low): a second handle's deferred sidecar landing
-    after a past vacuum's removal pass leaves an orphan .ckpt.json
-    that fsck reports forever. vacuum now sweeps sidecars whose
-    NNNNNNNN.json record no longer exists."""
-    import json as _json
-    import os
-
-    t = _mk_meta_table(tmp_path, "t", 10)
-    # plant an orphan sidecar for a version that never existed
-    orphan = t._sidecar_path(99)
-    with open(orphan, "w") as f:
-        _json.dump({"version": 99, "files": []}, f)
-    issues = t.fsck()
-    assert any("sidecar 99" in i and "orphan" in i for i in issues)
-    t.vacuum(keep_last=10, min_age_s=0)
-    assert not os.path.exists(orphan)
-    assert VersionedTable(t.root).fsck() == []
-
-
-def test_fsck_does_not_mutate_shared_handle_state(tmp_path):
-    """ADVICE r13 (low): fsck used to flip _use_sidecars and clear the
-    memo on the SHARED handle — a concurrent reader could observe the
-    degraded path mid-toggle. Pin: fsck leaves both untouched."""
-    t = _mk_meta_table(tmp_path, "t", 20, checkpoint_defer_files=8)
-    t.wait_for_checkpoint()
-    flips = []
-    cls = type(t)
-    orig = cls.__dict__.get("_load_ckpt_sidecar")
-    import functools
-
-    @functools.wraps(orig)
-    def spy(self, version):
-        flips.append(self._use_sidecars)
-        return orig(self, version)
-
-    cls._load_ckpt_sidecar = spy
-    try:
-        assert t.fsck() == []
-    finally:
-        cls._load_ckpt_sidecar = orig
-    assert t._use_sidecars is True
-    # every sidecar lookup during fsck saw the gate OPEN — the old
-    # implementation flipped it off around the divergence diff
-    assert flips and all(flips)
-
-
-# --- sharded (multi-part) checkpoint sidecars (round 14) ---------------------
-
-
-def test_sharded_sidecar_roundtrip_cold_read_and_fsck(tmp_path):
-    """Past sidecar_part_target groups a deferred checkpoint shards
-    into part files under a small root index; the read path
-    reassembles the exact snapshot, cold handles materialize through
-    it, and fsck validates the assembled content against pure chain
-    replay."""
-    import json as _json
-    import os
-
-    t = _mk_meta_table(
-        tmp_path, "t", 33, checkpoint_defer_files=8, sidecar_part_target=4
-    )
-    t.wait_for_checkpoint()
-    for v in (16, 32):
-        root = _json.load(open(t._sidecar_path(v)))
-        assert root["ckpt_parts"] >= 2, "snapshot should have sharded"
-        assert "files" not in root, "big keys belong to parts, not root"
-        assert os.path.exists(t._sidecar_part_path(v, 0))
-        side = t._load_ckpt_sidecar(v)
-        truth = t._manifest(v)
-        assert side["files"] == truth["files"]
-        assert side["stats"] == truth["stats"]
-        assert side["n_files"] == truth["n_files"]
-    cold = VersionedTable(t.root)
-    assert cold._manifest(32)["files"] == t._manifest(32)["files"]
-    assert VersionedTable(t.root).fsck() == []
-
-
-def test_sharded_sidecar_links_unchanged_parts(tmp_path):
-    """Link reuse: a shard none of the 16 delta records since the
-    previous sharded sidecar touched is HARD-LINKED (same inode) from
-    it, while shards holding changed keys are re-serialized — the
-    background write is O(changed shards), not O(live groups)."""
-    import json as _json
-    import os
-    import zlib as _zlib
-
-    t = _mk_meta_table(
-        tmp_path, "t", 33, checkpoint_defer_files=8, sidecar_part_target=2
-    )
-    t.wait_for_checkpoint()
-    p16 = _json.load(open(t._sidecar_path(16)))["ckpt_parts"]
-    p32 = _json.load(open(t._sidecar_path(32)))["ckpt_parts"]
-    assert p16 == p32, "hysteresis should keep the part count stable"
-    changed = {
-        _zlib.crc32(f"data/g{v:04d}".encode()) % p32 for v in range(17, 33)
-    }
-    linked = fresh = 0
-    for k in range(p32):
-        same = (
-            os.stat(t._sidecar_part_path(16, k)).st_ino
-            == os.stat(t._sidecar_part_path(32, k)).st_ino
-        )
-        if k in changed:
-            assert not same, f"changed shard {k} must be re-serialized"
-            fresh += 1
-        else:
-            assert same, f"untouched shard {k} should be a hard link"
-            linked += 1
-    assert linked > 0 and fresh > 0, "fixture must exercise both paths"
-
-
-def test_sharded_sidecar_missing_part_degrades_and_fsck_flags(tmp_path):
-    """Losing one part file makes the sidecar unusable as a unit —
-    reads silently fall back to pure chain replay (same snapshot),
-    fsck names the damage."""
-    import os
-
-    t = _mk_meta_table(
-        tmp_path, "t", 20, checkpoint_defer_files=8, sidecar_part_target=4
-    )
-    t.wait_for_checkpoint()
-    expect = t._manifest(19)
-    os.remove(t._sidecar_part_path(16, 0))
-    cold = VersionedTable(t.root)
-    assert cold._load_ckpt_sidecar(16) is None
-    m = cold._manifest(19)
-    assert m["files"] == expect["files"] and m["stats"] == expect["stats"]
-    issues = VersionedTable(t.root).fsck()
-    assert any(
-        "sidecar 16" in i and "part files missing" in i for i in issues
-    )
-
-
-def test_sharded_sidecar_divergent_part_detected(tmp_path):
-    """A well-formed but content-divergent part (bit rot, foreign
-    copy) is rejected by the per-part crc recorded in the root — at
-    ASSEMBLY time, by readers and fsck alike. This matters because
-    hard-link reuse shares one inode across sidecar generations: a
-    rotted shared part would otherwise silently corrupt every
-    generation that linked it, where round-13's independent
-    serializations confined rot to one version."""
-    import json as _json
-
-    t = _mk_meta_table(
-        tmp_path, "t", 20, checkpoint_defer_files=8, sidecar_part_target=4
-    )
-    t.wait_for_checkpoint()
-    expect = t._manifest(19)
-    # find a part carrying at least one stats entry and corrupt it
-    root = _json.load(open(t._sidecar_path(16)))
-    assert isinstance(root.get("part_crcs"), list)
-    for k in range(root["ckpt_parts"]):
-        pp = t._sidecar_part_path(16, k)
-        sh = _json.load(open(pp))
-        if sh["stats"]:
-            f0 = next(iter(sh["stats"]))
-            sh["stats"][f0] = {"k": [-1, -1], "__rows__": 1}
-            with open(pp, "w") as f:
-                _json.dump(sh, f)
-            break
-    cold = VersionedTable(t.root)
-    # the read path refuses the rotted sidecar and replays the chain
-    assert cold._load_ckpt_sidecar(16) is None
-    m = cold._manifest(19)
-    assert m["files"] == expect["files"] and m["stats"] == expect["stats"]
-    issues = VersionedTable(t.root).fsck()
-    assert any(
-        "sidecar 16" in i and ("inconsistent" in i or "diverges" in i)
-        for i in issues
-    )
 
 
 def test_pure_manifest_retries_through_concurrent_vacuum(tmp_path):
-    """_pure_manifest restarts its chain walk when a CONCURRENT
-    vacuum deletes an ancestor after rewriting the floor checkpoint —
-    the same tolerance _manifest has (fsck/vacuum keep-set/floor
-    rewrite would otherwise crash mid-operation on a live table)."""
-    t = _mk_meta_table(tmp_path, "t", 20, checkpoint_defer_files=8)
-    t.wait_for_checkpoint()
-    expect = t._pure_manifest(19)
+    """The one chain walk (``_materialize``) restarts when a
+    CONCURRENT vacuum deletes an ancestor after rewriting the floor
+    checkpoint (fsck, vacuum's keep-set and floor rewrite, and every
+    reader would otherwise crash mid-operation on a live table)."""
+    t = _mk_meta_table(tmp_path, "t", 20)
+    expect = VersionedTable(t.root)._manifest(19)
     # simulate the race: the first time the walk touches version 17,
     # rewrite v18 as a full checkpoint and delete v17 and v16 — the
     # restarted walk must resolve through the rewritten record
     import os
 
-    cls = type(t)
+    cold = VersionedTable(t.root)
+    cls = type(cold)
     orig = cls._load_record
     fired = {"n": 0}
 
@@ -5789,115 +5349,12 @@ def test_pure_manifest_retries_through_concurrent_vacuum(tmp_path):
 
     cls._load_record = racy
     try:
-        m = t._pure_manifest(19)
+        m = cold._manifest(19)
     finally:
         cls._load_record = orig
     assert fired["n"] == 1
     assert m["files"] == expect["files"] and m["stats"] == expect["stats"]
-
-
-def test_parse_sidecar_part_name_width_tolerant():
-    """{version:08d} WIDENS past 1e8 — the part parser must accept
-    what the formatter writes or sweeps would leak those parts."""
-    from netflow_analysis_with_spark_streaming_spark.storage.versioned import (
-        _parse_sidecar_part_name,
-    )
-
-    assert _parse_sidecar_part_name("00000016.ckpt.part-003.json") == 16
-    assert (
-        _parse_sidecar_part_name("100000000.ckpt.part-000.json") == 100000000
-    )
-    assert _parse_sidecar_part_name("0000016.ckpt.part-003.json") is None
-    assert _parse_sidecar_part_name("00000016.ckpt.json") is None
-    assert _parse_sidecar_part_name("00000016.ckpt.part-03.json") is None
-    assert _parse_sidecar_part_name("x0000016.ckpt.part-003.json") is None
-
-
-def test_rootless_parts_flagged_by_fsck_and_swept_by_vacuum(tmp_path):
-    """A crash between the part writes and the root link leaves inert
-    rootless parts: fsck reports them, vacuum's debris sweep removes
-    them (age-gated so an in-flight writer's parts survive), and the
-    table stays healthy throughout."""
-    import os
-
-    t = _mk_meta_table(
-        tmp_path, "t", 20, checkpoint_defer_files=8, sidecar_part_target=4
-    )
-    t.wait_for_checkpoint()
-    os.remove(t._sidecar_path(16))  # simulate crash-before-root-link
-    issues = t.fsck()
-    assert any("no root sidecar" in i for i in issues)
-    # age gate: a young rootless part set survives a sweep
-    t.vacuum(keep_last=100, min_age_s=3600.0)
-    assert os.path.exists(t._sidecar_part_path(16, 0))
-    # old debris goes
-    t.vacuum(keep_last=100, min_age_s=0.0)
-    assert not os.path.exists(t._sidecar_part_path(16, 0))
-    assert t.fsck() == []
-
-
-def test_vacuum_removes_doomed_sharded_parts(tmp_path):
-    """Doomed versions' roots AND parts age out together; a surviving
-    sidecar that hard-links shards shared with a doomed one keeps its
-    content (hard links are independent directory entries)."""
-    import os
-
-    t = _mk_meta_table(
-        tmp_path, "t", 40, checkpoint_defer_files=8, sidecar_part_target=4
-    )
-    t.wait_for_checkpoint()
-    survivor = t._load_ckpt_sidecar(32)
-    t.vacuum(keep_last=9, min_age_s=0.0)  # keeps 31..39, dooms <= 30
-    assert not os.path.exists(t._sidecar_path(16))
-    assert not os.path.exists(t._sidecar_part_path(16, 0))
-    cold = VersionedTable(t.root)
-    side = cold._load_ckpt_sidecar(32)
-    assert side is not None and side["files"] == survivor["files"]
-    assert cold.fsck() == []
-
-
-def test_sidecar_part_count_hysteresis(tmp_path):
-    """Band-edge stability: the computed power-of-two count yields to
-    the previous sidecar's count within one band either way, so a
-    table hovering at a boundary never flips counts (and never
-    forfeits link reuse); two bands away it re-bases."""
-    t = VersionedTable(str(tmp_path / "t"), sidecar_part_target=100)
-    assert t._sidecar_part_count(99) == 1
-    assert t._sidecar_part_count(101) == 2
-    assert t._sidecar_part_count(350) == 4
-    # hovering at the 4->8 edge: previous count sticks
-    assert t._sidecar_part_count(450, prev_parts=4) == 4
-    assert t._sidecar_part_count(450, prev_parts=8) == 8
-    # two bands of growth re-bases
-    assert t._sidecar_part_count(1700, prev_parts=4) == 32
-    # cap
-    assert t._sidecar_part_count(10**9) == 256
-
-
-def test_sidecar_backlog_cap_skips_stale_writers(tmp_path):
-    """A sidecar writer that falls >= 2 checkpoint periods behind the
-    newest queued one yields (a sidecar is an acceleration — skipping
-    only lengthens replay), bounding how many O(live groups)
-    manifests a commit burst can pin in memory; a writer within the
-    window still publishes."""
-    import os
-
-    t = _mk_meta_table(tmp_path, "t", 20, checkpoint_defer_files=8)
-    t.wait_for_checkpoint()
-    m16 = t._manifest(16)
-    os.remove(t._sidecar_path(16))
-    # stale: the handle has since queued version 16 + 2*_ckpt_every
-    t._ckpt_queued_hwm = 16 + 2 * t._ckpt_every
-    t._sidecar_write_after(16, m16, [])
-    assert not os.path.exists(t._sidecar_path(16))
-    # within the window: publishes normally
-    t._ckpt_queued_hwm = 16 + t._ckpt_every
-    t._sidecar_write_after(16, m16, [])
-    assert os.path.exists(t._sidecar_path(16))
-    assert t.fsck() == []
-
-
-# --- append_rows: driver-local landings (round 15) -----------------------
+    assert "delta_of" not in cold._load_record(18)
 
 
 def test_append_rows_roundtrip_and_replay(spark, tmp_path):

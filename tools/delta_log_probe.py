@@ -66,241 +66,10 @@ def _drive(t: VersionedTable, n: int, groups: list[str]) -> dict[int, int]:
     return sizes
 
 
-def _checkpoint_cost(sizes: list[int]) -> list[dict]:
-    """Round-11 probe (verdict-r10 ask #5): the two O(live groups)
-    terms protocol 4 retains — the FULL checkpoint written every 16th
-    commit, and the cold-handle materialization that parses one full
-    base then replays <=16 delta records. Synthesizes a table AT each
-    size directly (a version-0 full record carrying N groups — growing
-    there by appends would write O(N^2/16) checkpoint bytes), then
-    measures: the wall seconds and bytes of the next CHECKPOINT commit
-    (version 16), a steady-state delta commit for contrast, and a cold
-    _manifest() of a 15-deltas-past-checkpoint version (the worst
-    replay)."""
-    import time as _time
-
-    out = []
-    for n in sizes:
-        base = tempfile.mkdtemp(prefix="netflow_dlpc_")
-        try:
-            t = VersionedTable(os.path.join(base, "t"))
-            groups = [f"data/{uuid.uuid4().hex}" for _ in range(n + 32)]
-            files = groups[:n]
-            stats = {
-                g: {"k": [i * 10, i * 10 + 9], "__rows__": 10}
-                for i, g in enumerate(files)
-            }
-            t._commit(list(files), "append", SCHEMA_JSON, stats=dict(stats))
-            # versions 1..15: steady-state delta commits. Odd versions
-            # exercise the re-diff encoder (no hint), even versions the
-            # O(change) adds_hint path EVERY REAL APPEND CALLER USES
-            # (round 12) — both timings reported.
-            dt_delta = dt_hint = None
-            for j in range(1, 16):
-                g = groups[n + j]
-                hint = [g] if j % 2 == 0 else None
-                # real hinted callers (append/commit_staged) pass the
-                # PARENT MANIFEST's file list + adds — already sorted,
-                # no caller-side sort cost — so mirror that outside
-                # the timed window (the structural contract checks it)
-                call_files = (
-                    sorted(files) + [g] if hint else files + [g]
-                )
-                files.append(g)
-                stats[g] = {"k": [0, 9], "__rows__": 10}
-                t0 = _time.perf_counter()
-                t._commit(
-                    call_files,
-                    "append",
-                    SCHEMA_JSON,
-                    stats=dict(stats),
-                    adds_hint=hint,
-                )
-                if hint is None:
-                    dt_delta = _time.perf_counter() - t0
-                else:
-                    dt_hint = _time.perf_counter() - t0
-            # version 16: the FULL checkpoint (version % 16 == 0)
-            g = groups[n + 16]
-            files.append(g)
-            stats[g] = {"k": [0, 9], "__rows__": 10}
-            t0 = _time.perf_counter()
-            v16 = t._commit(
-                list(files), "append", SCHEMA_JSON, stats=dict(stats)
-            )
-            ckpt_s = _time.perf_counter() - t0
-            # past checkpoint_defer_files (round 13) the v16 commit is
-            # O(change) and the full snapshot lands OUT-OF-BAND as the
-            # .ckpt.json sidecar — join the writer and report its cost
-            # separately (the term that left the commit path)
-            t0 = _time.perf_counter()
-            t.wait_for_checkpoint()
-            sidecar_s = _time.perf_counter() - t0
-            sidecar = t._sidecar_path(16)
-            sidecar_bytes = (
-                os.path.getsize(sidecar) if os.path.exists(sidecar) else 0
-            )
-            # sharded sidecars put the bulk in part files
-            k = 0
-            while os.path.exists(t._sidecar_part_path(16, k)):
-                sidecar_bytes += os.path.getsize(t._sidecar_part_path(16, k))
-                k += 1
-            assert v16 == 16
-            rec16 = os.path.join(t.root, "_log", "00000016.json")
-            # versions 17..31: deltas past the checkpoint, so the cold
-            # read below replays the WORST chain (15 records + base)
-            for j in range(17, 32):
-                g = groups[n + j] if n + j < len(groups) else f"data/{uuid.uuid4().hex}"
-                files.append(g)
-                stats[g] = {"k": [0, 9], "__rows__": 10}
-                t._commit(
-                    list(files), "append", SCHEMA_JSON, stats=dict(stats)
-                )
-            cold = VersionedTable(os.path.join(base, "t"))
-            t0 = _time.perf_counter()
-            m = cold._manifest(31)
-            cold_s = _time.perf_counter() - t0
-            assert len(m["files"]) == n + 31  # 16 + 15 synthetic appends
-            t0 = _time.perf_counter()
-            cold._manifest(31)  # memoized (the round-11 memo fix)
-            warm_s = _time.perf_counter() - t0
-            # round 14: the SECOND deferred checkpoint (v32) is the
-            # steady-state one — its sharded writer hard-links every
-            # part the 16 delta records since v16 didn't touch, so
-            # its background cost is O(change + changed shards), not
-            # O(live groups). Report its wall + the link/fresh split.
-            g = f"data/{uuid.uuid4().hex}"
-            files.append(g)
-            stats[g] = {"k": [0, 9], "__rows__": 10}
-            t._commit(list(files), "append", SCHEMA_JSON, stats=dict(stats))
-            t0 = _time.perf_counter()
-            t.wait_for_checkpoint()
-            sidecar2_s = _time.perf_counter() - t0
-            parts2 = linked2 = 0
-            side_root = t._sidecar_path(32)
-            if os.path.exists(side_root):
-                with open(side_root, encoding="utf-8") as fh:
-                    root = json.load(fh)
-                parts2 = root.get("ckpt_parts", 0) or 0
-                for k in range(parts2):
-                    p16p = t._sidecar_part_path(16, k)
-                    p32p = t._sidecar_part_path(32, k)
-                    if (
-                        os.path.exists(p16p)
-                        and os.path.exists(p32p)
-                        and os.stat(p16p).st_ino == os.stat(p32p).st_ino
-                    ):
-                        linked2 += 1
-            out.append(
-                {
-                    "groups": n,
-                    "checkpoint_write_s": round(ckpt_s, 3),
-                    "checkpoint_bytes": os.path.getsize(rec16),
-                    "sidecar_join_s": round(sidecar_s, 3),
-                    "sidecar_bytes": sidecar_bytes,
-                    "sidecar2_join_s": round(sidecar2_s, 3),
-                    "sidecar2_parts": parts2,
-                    "sidecar2_linked": linked2,
-                    "steady_delta_commit_s": round(dt_delta, 4),
-                    "steady_delta_commit_hint_s": round(dt_hint, 4),
-                    "cold_manifest_s": round(cold_s, 3),
-                    "warm_manifest_s": round(warm_s, 6),
-                }
-            )
-        finally:
-            shutil.rmtree(base, ignore_errors=True)
-    return out
-
-
-def _cadence(n: int, n_commits: int, defer: bool) -> dict:
-    """Round-13 probe: the per-trigger commit-latency DISTRIBUTION of
-    a steady hinted ingest at ``n`` live groups, driven across
-    multiple checkpoint boundaries — the direct evidence for the
-    deferred-sidecar claim. ``defer=False`` pins the pre-round-13
-    behavior (inline full checkpoint on the trigger path) by setting
-    the defer threshold above n."""
-    import time as _time
-
-    base = tempfile.mkdtemp(prefix="netflow_dlcad_")
-    try:
-        t = VersionedTable(
-            os.path.join(base, "t"),
-            # force the branch at ANY probed size: threshold 1 always
-            # defers, 1<<60 never does — using the production default
-            # (200k) instead would silently measure inline behavior
-            # twice for --cadence values below it
-            checkpoint_defer_files=(1 if defer else 1 << 60),
-        )
-        groups = [f"data/{uuid.uuid4().hex}" for _ in range(n + n_commits)]
-        files = sorted(groups[:n])
-        stats = {
-            g: {"k": [i * 10, i * 10 + 9], "__rows__": 10}
-            for i, g in enumerate(files)
-        }
-        v = t._commit(list(files), "append", SCHEMA_JSON, stats=dict(stats))
-        lat = []
-        for j in range(1, n_commits + 1):
-            g = groups[n + j - 1]
-            # real hinted callers pass the PARENT MANIFEST's list + adds
-            # (memoized — no re-read); the hint contract checks exactly
-            # that shape
-            call_files = t._manifest(v)["files"] + [g]
-            stats[g] = {"k": [0, 9], "__rows__": 10}
-            t0 = _time.perf_counter()
-            v = t._commit(
-                call_files,
-                "append",
-                SCHEMA_JSON,
-                stats=dict(stats),
-                adds_hint=[g],
-            )
-            lat.append(_time.perf_counter() - t0)
-        t.wait_for_checkpoint()
-        lat.sort()
-        k = len(lat)
-        return {
-            "groups": n,
-            "commits": n_commits,
-            "defer": defer,
-            "p50_s": round(lat[k // 2], 4),
-            "p90_s": round(lat[int(k * 0.9)], 4),
-            "max_s": round(lat[-1], 4),
-        }
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--groups", type=int, default=2048)
-    ap.add_argument(
-        "--checkpoint-cost",
-        type=str,
-        default=None,
-        help="csv of live-group sizes; measures checkpoint-write and "
-        "cold-read seconds at each (skips the growth probe)",
-    )
-    ap.add_argument(
-        "--cadence",
-        type=int,
-        default=None,
-        metavar="GROUPS",
-        help="per-trigger latency distribution of a hinted ingest at "
-        "GROUPS live groups across 2 checkpoint boundaries, with and "
-        "without sidecar deferral",
-    )
     args = ap.parse_args()
-    if args.cadence:
-        out = [
-            _cadence(args.cadence, 33, defer=False),
-            _cadence(args.cadence, 33, defer=True),
-        ]
-        print(json.dumps({"cadence": out}))
-        return 0
-    if args.checkpoint_cost:
-        sizes = [int(s) for s in args.checkpoint_cost.split(",") if s]
-        print(json.dumps({"checkpoint_cost": _checkpoint_cost(sizes)}))
-        return 0
     n = args.groups
     base = tempfile.mkdtemp(prefix="netflow_dlp_")
     try:
