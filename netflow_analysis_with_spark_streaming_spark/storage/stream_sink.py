@@ -117,6 +117,15 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from .stream_source import (
+    PruningSnapshotBatchReader,
+    VersionedSnapshotBatchReader,
+    VersionedTableStreamReader,
+    build_batch_reader,
+    build_stream_reader,
+)
+from .versioned import VersionedTable, resolve_table_root
+
 FORMAT_NAME = "versioned_table"
 
 
@@ -480,8 +489,6 @@ class VersionedSinkWriter(DataSourceStreamArrowWriter, DataSourceArrowWriter):
         return [m for m in messages if m is not None and m.group]
 
     def commit(self, messages, batchId: int | None = None) -> None:
-        from .versioned import VersionedTable
-
         staged = self._staged(messages)
         t = VersionedTable(self.root)
         if not staged and not self.overwrite:
@@ -532,7 +539,8 @@ class VersionedSinkDataSource(DataSource):
       (epoch seconds — Delta's rule: latest commit at or before the
       instant), ``pushdown`` ("true": Catalyst pushFilters prune,
       needs spark.sql.python.filterPushdown.enabled), ``prune``
-      (caller-declared ``[[col, lo, hi], ...]`` for vanilla sessions),
+      (caller-declared ``[[col, lo, hi], ...]`` for vanilla sessions;
+      both skip through ``VersionedTable.snapshot_files``' rule),
       ``columns`` (csv — column projection AT THE SOURCE: Spark does
       not push column pruning into Python scans, so this narrows the
       negotiated schema itself and the per-file arrow read opens only
@@ -546,9 +554,6 @@ class VersionedSinkDataSource(DataSource):
     # --- batch snapshot READ ------------------------------------------
 
     def _table(self):
-        from .stream_source import resolve_table_root
-        from .versioned import VersionedTable
-
         root = self.options.get("path")
         if not root:
             raise ValueError(
@@ -634,8 +639,6 @@ class VersionedSinkDataSource(DataSource):
         limits as the feed reader; only the row framing differs. The
         negotiated schema is this DataSource's schema() = the
         snapshot schema, which is exactly the bare row shape."""
-        from .stream_source import VersionedTableStreamReader, build_stream_reader
-
         return build_stream_reader(
             self.options,
             self._table().root,  # validates the path option
@@ -644,37 +647,19 @@ class VersionedSinkDataSource(DataSource):
         )
 
     def reader(self, schema):
-        from .stream_source import (
-            ExplicitPruneSnapshotBatchReader,
-            PruningSnapshotBatchReader,
-            VersionedSnapshotBatchReader,
-            _prune_triples_to_filters,
-        )
-
         t = self._table()
-        v = self._pinned_version(t)
-        cls = (
-            PruningSnapshotBatchReader
-            if str(self.options.get("pushdown", "")).lower() == "true"
-            else VersionedSnapshotBatchReader
+        return build_batch_reader(
+            self.options,
+            VersionedSnapshotBatchReader,
+            PruningSnapshotBatchReader,
+            t.root,
+            schema,
+            self._pinned_version(t),
         )
-        prune_raw = self.options.get("prune")
-        if prune_raw and cls is VersionedSnapshotBatchReader:
-            cls = ExplicitPruneSnapshotBatchReader
-        r = cls(t.root, schema, v)
-        if prune_raw:
-            explicit = _prune_triples_to_filters(json.loads(prune_raw))
-            r._prune_filters = explicit
-            if isinstance(r, PruningSnapshotBatchReader):
-                r._explicit_prune = explicit
-        return r
 
     def _build_writer(
         self, schema, overwrite: bool, app_id: str | None = None
     ) -> VersionedSinkWriter:
-        from .stream_source import resolve_table_root
-        from .versioned import VersionedTable
-
         root = self.options.get("path")
         if not root:
             raise ValueError(

@@ -44,6 +44,13 @@ Semantics and scale:
   delete) inside a consumed window fails the stream with
   ``read_change_feed``'s own error — the consumer must re-sync from
   a snapshot, the same contract Delta CDF streaming has.
+- **One skipping rule.** Every group this module prunes — by the
+  ``prune`` option or by Catalyst pushdown, in a snapshot, a bounded
+  window, a stream or an ``initialSnapshot`` batch — is decided by
+  ``versioned._group_may_match``, the rule ``snapshot_files`` applies:
+  bounds ordered by the column's type, a group dropped only when its
+  stats prove no row can match. The consumer still applies its exact
+  filter.
 
 The bounded twin (``spark.read.format("versioned_feed")``) reads one
 explicit (sinceVersion, toVersion] window through the identical
@@ -60,7 +67,8 @@ consumption starts right after the pinned version; Delta readStream's
 opening move, and what lets a consumer start on a table with feed
 walls anywhere in its past), ``maxVersionsPerTrigger`` (commit-unit
 rate limit), ``prune`` (caller-declared stats pruning,
-``[[col, lo, hi], ...]``; applies to the snapshot batch too),
+``[[col, lo, hi], ...]``, ``null`` for an open end; applies to the
+snapshot batch too),
 ``sinceVersion`` / ``toVersion`` (batch window, exclusive /
 inclusive), ``pushdown`` (batch: opt-in Catalyst filter pushdown),
 ``skipChangeCommits`` ("true": insert-only consumption, Delta's
@@ -114,6 +122,13 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from .versioned import (
+    VersionedTable,
+    _group_may_match,
+    _stat_types,
+    resolve_table_root,
+)
 
 FORMAT_NAME = "versioned_feed"
 _META_COLS = ("_change_type", "_commit_version")
@@ -191,7 +206,8 @@ def _snapshot_partitions(
     t,
     version: int,
     schema_json: str,
-    filters: list | None = None,
+    ranges=(),
+    points=(),
     bare: bool = False,
 ) -> list[FeedPartition]:
     """Initial-snapshot partitions (the Delta readStream opening move):
@@ -200,17 +216,16 @@ def _snapshot_partitions(
     group's deletion-vector dirs for EXECUTOR-side merge-on-read (the
     worker drops the marked row indexes — same (rel-path, row_index)
     key the JVM anti-join uses). O(live files) by definition — serving
-    a snapshot IS a table scan; the stream's caller-declared ``prune``
-    bound applies against the manifest stats."""
+    a snapshot IS a table scan; ``ranges`` and ``points`` skip groups
+    through the one rule."""
     m = t._manifest(version)
     mapping = t._mapping(version)
     stats = m.get("stats") or {}
+    types = _stat_types(m["schema"]) if ranges else {}
     dvs = m.get("dvs") or {}
     parts: list[FeedPartition] = []
     for g in m["files"]:
-        if filters and not PruningFeedBatchReader._group_may_match(
-            stats.get(g) or {}, filters
-        ):
+        if not _group_may_match(stats.get(g) or {}, types, ranges, points):
             continue
         gdir = os.path.join(t.root, g)
         dv_dirs = [
@@ -237,7 +252,10 @@ def _read_partition(partition: FeedPartition) -> Iterator:
     """Executor-side read: one parquet file -> Arrow batches in the
     stream schema. Pads columns the file predates with nulls and
     casts widened types — per-file mergeSchema, same discipline as
-    the batch reader's ``spark.read.option("mergeSchema")``."""
+    the batch reader's ``spark.read.option("mergeSchema")``. A batch
+    plan with no partitions reaches here as ``None``: no rows."""
+    if partition is None:
+        return
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -321,85 +339,58 @@ def _read_partition(partition: FeedPartition) -> Iterator:
     yield from full.to_batches(max_chunksize=1 << 16)
 
 
-# Canonical home moved to versioned.py so VersionedTable.__init__ can
-# apply the same resolution (raw-URI roots used to create junk
-# ``file:/`` trees and read as empty tables); re-exported here because
-# the sink and tests import it from this module.
-from .versioned import resolve_table_root  # noqa: E402,F401
-
-
-def _prune_triples_to_filters(triples: list) -> list:
-    """Convert caller-declared prune triples ``[col, lo, hi]`` into the
-    datasource Filter objects `_group_may_match` evaluates — a point
-    triple (lo == hi) becomes EqualTo so bloom indexes get probed,
-    a range becomes the >=/<= pair."""
-    from pyspark.sql.datasource import (
-        EqualTo,
-        GreaterThanOrEqual,
-        LessThanOrEqual,
-    )
-
-    out: list = []
-    for t in triples:
+def _parse_prune(raw: str | None) -> tuple[list, list]:
+    """The ``prune`` option, ``[[col, lo, hi], ...]`` (``null`` = an
+    open end), as the skipping rule's ranges and points: a triple with
+    lo == hi is also a bloom point."""
+    ranges: list = []
+    points: list = []
+    for t in json.loads(raw) if raw else []:
         if not (isinstance(t, (list, tuple)) and len(t) == 3):
             raise ValueError(
                 f"prune expects [[col, lo, hi], ...] triples; got {t!r}"
             )
         col, lo, hi = t
+        ranges.append((col, lo, hi))
         if lo == hi and lo is not None:
-            out.append(EqualTo((col,), lo))
-        else:
-            if lo is not None:
-                out.append(GreaterThanOrEqual((col,), lo))
-            if hi is not None:
-                out.append(LessThanOrEqual((col,), hi))
-    return out
+            points.append((col, [lo]))
+    return ranges, points
 
 
-def _prune_slices(t, slices: list, filters: list) -> list:
-    """Stats-prune each slice's file groups against ``filters`` — one
-    RECORD read per slice, never a materialized snapshot: an insert
-    slice's groups are the groups its commit ADDED, whose stats ride a
+def _prune_slices(t, slices: list, ranges=(), points=()) -> list:
+    """Skip each slice's file groups through the one rule — one RECORD
+    read per slice, never a materialized snapshot: an insert slice's
+    groups are the groups its commit ADDED, whose stats ride a
     protocol-4 delta record's own stats_set verbatim (full manifests
-    carry the whole index; capture groups have no stats either way and
-    are conservatively kept). Shared by the stream reader, the
-    Catalyst pushdown reader, and the explicit-prune bounded reader so
-    the skipping semantics cannot diverge."""
+    carry the whole index), and whose column types ride that record's
+    own schema. Capture groups have no stats and are kept."""
+    if not ranges and not points:
+        return slices
     pruned = []
     for v, change, groups in slices:
         rec = t._load_record(v)
         stats = (
             rec.get("stats_set") if "delta_of" in rec else rec.get("stats")
         ) or {}
-        pruned.append(
-            (
-                v,
-                change,
-                [
-                    g
-                    for g in groups
-                    if PruningFeedBatchReader._group_may_match(
-                        stats.get(g) or {}, filters
-                    )
-                ],
-            )
-        )
+        types = _stat_types(rec["schema"])
+        keep = [
+            g
+            for g in groups
+            if _group_may_match(stats.get(g) or {}, types, ranges, points)
+        ]
+        pruned.append((v, change, keep))
     return pruned
 
 
 class VersionedFeedStreamReader(DataSourceStreamReader):
     """Commit versions as offsets over VersionedTable.feed_slices.
 
-    ``prune_filters`` (from ``.option("prune", json)``) stats-prunes
+    ``ranges`` / ``points`` (from ``.option("prune", json)``) skip
     each slice's file groups at micro-batch PLANNING time — the
     streaming twin of the batch reader's Catalyst pushdown, which the
     Python streaming DataSource API has no hook for, so the caller
-    declares the bound explicitly (a tenant/region/key-range CDC
-    consumer of a 100 TB table's feed plans only the groups that can
-    hold its rows). Superset guarantee as everywhere: the consumer
-    still applies its exact row filter; pruning only skips groups the
-    manifest PROVES empty of matches (min/max overlap + bloom probes
-    on point bounds)."""
+    declares the bound explicitly. Superset guarantee as everywhere:
+    the consumer still applies its exact row filter."""
 
     def __init__(
         self,
@@ -407,7 +398,8 @@ class VersionedFeedStreamReader(DataSourceStreamReader):
         schema: StructType,
         starting_version: int,
         max_versions: int | None = None,
-        prune_filters: list | None = None,
+        ranges=(),
+        points=(),
         initial_snapshot: bool = False,
         skip_change_commits: bool = False,
         max_files: int | None = None,
@@ -420,7 +412,8 @@ class VersionedFeedStreamReader(DataSourceStreamReader):
         self._max_versions = max_versions
         self._max_files = max_files
         self._max_bytes = max_bytes
-        self._prune_filters = prune_filters or []
+        self._ranges = list(ranges)
+        self._points = list(points)
         self._initial_snapshot = initial_snapshot
         self._skip_changes = skip_change_commits
         # last batch end OFFSET seen by partitions(): the rate-limit
@@ -480,17 +473,16 @@ class VersionedFeedStreamReader(DataSourceStreamReader):
         None = through the end), prune applied AFTER slicing so the
         offset space stays raw."""
         files = self._version_files(t, v)[lo:hi]
-        if self._prune_filters and files:
-            allowed: set = set()
+        if (self._ranges or self._points) and files:
             pruned = _prune_slices(
                 t,
                 t.feed_slices(
                     v - 1, v, skip_change_commits=self._skip_changes
                 ),
-                self._prune_filters,
+                self._ranges,
+                self._points,
             )
-            for _v, _c, groups in pruned:
-                allowed.update(groups)
+            allowed = {g for _v, _c, groups in pruned for g in groups}
             files = [f for f in files if f[1] in allowed]
         return [
             FeedPartition(path, change, v, self._schema_json, mapping)
@@ -508,8 +500,6 @@ class VersionedFeedStreamReader(DataSourceStreamReader):
             # snapshot version; once the first batch commits, the
             # checkpointed offset is a plain version and later batches
             # are ordinary change slices.
-            from .versioned import VersionedTable
-
             lv = VersionedTable(self._root).latest_version()
             # schema() already refused tables with no committed version
             self._last_end = {"version": lv}
@@ -518,8 +508,6 @@ class VersionedFeedStreamReader(DataSourceStreamReader):
         return {"version": self._start}
 
     def latestOffset(self) -> dict:
-        from .versioned import VersionedTable
-
         t = VersionedTable(self._root)
         lv = t.latest_version()
         anchor = self._last_end
@@ -598,8 +586,6 @@ class VersionedFeedStreamReader(DataSourceStreamReader):
             if e_i is None
             else {"version": e_v, "file_idx": e_i}
         )
-        from .versioned import VersionedTable
-
         parts: list[InputPartition] = []
         snap = start.get("snapshot")
         if snap is not None:
@@ -612,7 +598,8 @@ class VersionedFeedStreamReader(DataSourceStreamReader):
                     VersionedTable(self._root),
                     int(snap),
                     self._schema_json,
-                    self._prune_filters or None,
+                    self._ranges,
+                    self._points,
                 )
             )
         if self._pos(e_v, e_i) <= self._pos(s_v, s_i):
@@ -624,8 +611,7 @@ class VersionedFeedStreamReader(DataSourceStreamReader):
             slices = t.feed_slices(
                 s_v, e_v, skip_change_commits=self._skip_changes
             )
-            if self._prune_filters:
-                slices = _prune_slices(t, slices, self._prune_filters)
+            slices = _prune_slices(t, slices, self._ranges, self._points)
             return parts + _slice_partitions(
                 t.root, slices, self._schema_json, mapping
             )
@@ -647,8 +633,7 @@ class VersionedFeedStreamReader(DataSourceStreamReader):
             slices = t.feed_slices(
                 s_v, mid_hi, skip_change_commits=self._skip_changes
             )
-            if self._prune_filters:
-                slices = _prune_slices(t, slices, self._prune_filters)
+            slices = _prune_slices(t, slices, self._ranges, self._points)
             parts.extend(
                 _slice_partitions(t.root, slices, self._schema_json, mapping)
             )
@@ -667,27 +652,71 @@ class VersionedFeedStreamReader(DataSourceStreamReader):
         pass
 
 
+def _push_filters(reader, filters):
+    """Catalyst's pushed conjunctive filters as skipping bounds, added
+    to the reader's ``prune`` bounds (AND): ``=`` and ``IN`` become a
+    range and, on ``_bloomable`` columns, a bloom point; ``>``, ``>=``,
+    ``<``, ``<=`` become an open-ended range. Only columns
+    ``VersionedTable._auto_prunable`` accepts take part — timestamps
+    do not — so a pushed filter never raises. Every filter is returned
+    as residual: skipping is superset-only, Spark still applies the
+    exact row predicate. The one body of both pushdown readers."""
+    from pyspark.sql.datasource import (
+        EqualTo,
+        GreaterThan,
+        GreaterThanOrEqual,
+        In,
+        LessThan,
+        LessThanOrEqual,
+    )
+
+    types = {
+        f.name: f.dataType
+        for f in StructType.fromJson(json.loads(reader._schema_json)).fields
+    }
+    for f in filters:
+        dtype = types.get(f.attribute[0]) if len(f.attribute) == 1 else None
+        if dtype is None or not VersionedTable._auto_prunable(dtype):
+            continue
+        col = f.attribute[0]
+        if isinstance(f, (EqualTo, In)):
+            vals = [f.value] if isinstance(f, EqualTo) else list(f.value)
+            vals = [v for v in vals if v is not None]
+            if vals:
+                reader._ranges.append((col, min(vals), max(vals)))
+                if VersionedTable._bloomable(dtype):
+                    reader._points.append((col, vals))
+        elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
+            reader._ranges.append((col, f.value, None))
+        elif isinstance(f, (LessThan, LessThanOrEqual)):
+            reader._ranges.append((col, None, f.value))
+    return filters
+
+
 class VersionedFeedBatchReader(DataSourceReader):
     """Bounded (sinceVersion, toVersion] window through the stream's
-    exact partition/read path. ``_prune_filters`` (empty here, set by
-    the pruning subclasses / the reader() factory) stats-prunes each
-    slice's groups — ONE shared partitions() so the window/pruning
-    plumbing cannot diverge across the three reader variants."""
-
-    _prune_filters: list = []
-    _skip_changes: bool = False  # skipChangeCommits (reader() factory)
+    exact partition/read path; ``ranges`` / ``points`` (the ``prune``
+    option) skip each slice's groups through the one rule."""
 
     def __init__(
-        self, root: str, schema: StructType, since: int, to: int | None
+        self,
+        root: str,
+        schema: StructType,
+        since: int,
+        to: int | None,
+        ranges=(),
+        points=(),
+        skip_change_commits: bool = False,
     ):
         self._root = root
         self._schema_json = _data_schema(schema).json()
         self._since = since
         self._to = to
+        self._ranges = list(ranges)
+        self._points = list(points)
+        self._skip_changes = skip_change_commits
 
     def partitions(self) -> Sequence[InputPartition]:
-        from .versioned import VersionedTable
-
         t = VersionedTable(self._root)
         # resolve the window end ONCE and pass it as feed_slices'
         # explicit to_version: letting feed_slices re-resolve latest
@@ -699,12 +728,9 @@ class VersionedFeedBatchReader(DataSourceReader):
         slices = t.feed_slices(
             self._since, end, skip_change_commits=self._skip_changes
         )
-        if self._prune_filters:
-            # per-slice stats from the COMMIT that added the groups —
-            # always present for stat-carrying appends, regardless of
-            # later compactions. One manifest read per slice, never
-            # per group.
-            slices = _prune_slices(t, slices, self._prune_filters)
+        # per-slice stats from the COMMIT that added the groups — one
+        # record read per slice, never per group
+        slices = _prune_slices(t, slices, self._ranges, self._points)
         return _slice_partitions(
             t.root, slices, self._schema_json, t._mapping(end)
         )
@@ -714,134 +740,14 @@ class VersionedFeedBatchReader(DataSourceReader):
 
 
 class PruningFeedBatchReader(VersionedFeedBatchReader):
-    """The bounded reader plus manifest-stats partition pruning driven
-    by Spark's own filter pushdown. Opt-in via
-    ``.option("pushdown", "true")`` because implementing
-    ``pushFilters`` at all requires
+    """The bounded reader plus skipping driven by Spark's own filter
+    pushdown. Opt-in via ``.option("pushdown", "true")`` because
+    implementing ``pushFilters`` at all requires
     ``spark.sql.python.filterPushdown.enabled=true`` on the session —
     Spark fails closed rather than silently skipping an implemented
     pushFilters, so the default reader must not carry one."""
 
-    def __init__(
-        self, root: str, schema: StructType, since: int, to: int | None
-    ):
-        super().__init__(root, schema, since, to)
-        # _explicit_prune holds caller-declared .option("prune", ...)
-        # bounds; pushFilters UNIONS Catalyst's pushed filters with
-        # them rather than replacing (AND semantics — both bounds
-        # hold), so combining the two options never silently discards
-        # the caller's declared skipping bound.
-        self._explicit_prune: list = []
-        self._prune_filters: list = []
-
-    def pushFilters(self, filters):
-        """Catalyst hands the scan's conjunctive filters here at
-        planning time. We keep the range/point shapes the manifest
-        stats can act on and use them in ``partitions()`` to SKIP
-        whole slice groups (min/max overlap + bloom probes — the same
-        data-skipping index ``VersionedTable.read(prune=/point=)``
-        uses), then return EVERY filter as residual: pruning is a
-        superset guarantee, Spark still applies the exact row
-        predicate. Net effect: a filtered
-        ``spark.read.format('versioned_feed')`` scan plans only the
-        part files that can hold matching rows — pushdown through a
-        Python data source, no reader-specific API needed."""
-        from pyspark.sql.datasource import (
-            EqualTo,
-            GreaterThan,
-            GreaterThanOrEqual,
-            In,
-            LessThan,
-            LessThanOrEqual,
-        )
-
-        usable = (
-            EqualTo,
-            GreaterThan,
-            GreaterThanOrEqual,
-            In,
-            LessThan,
-            LessThanOrEqual,
-        )
-        self._prune_filters = list(self._explicit_prune) + [
-            f
-            for f in filters
-            if isinstance(f, usable) and len(f.attribute) == 1
-        ]
-        return filters  # all residual: skipping is superset-only
-
-    @staticmethod
-    def _group_may_match(group_stats: dict, filters: list) -> bool:
-        """Conservative overlap check of one group's manifest stats
-        against the pushed filters (AND semantics): min/max ranges for
-        every shape, plus bloom probes for EqualTo/In on bloom-indexed
-        groups (the append-ordered case, where every group's range
-        overlaps but blooms prove absence). Missing stats, a NULL
-        bound, or an incomparable/unhashable value keep the group —
-        skipping must stay a superset guarantee."""
-        import base64
-
-        from pyspark.sql.datasource import (
-            EqualTo,
-            GreaterThan,
-            GreaterThanOrEqual,
-            In,
-            LessThan,
-            LessThanOrEqual,
-        )
-
-        from .versioned import _BLOOM_KEY, _bloom_positions_py
-
-        def bloom_excludes(col: str, values) -> bool:
-            b = (group_stats.get(_BLOOM_KEY) or {}).get(col)
-            if not b:
-                return False  # unindexed: can't prune safely
-            bits = base64.b64decode(b["b64"])
-            try:
-                return not any(
-                    all(
-                        (bits[p // 8] >> (p % 8)) & 1
-                        for p in _bloom_positions_py(v, b["m"], b["k"])
-                    )
-                    for v in values
-                )
-            except TypeError:
-                return False  # unsupported key type: keep the group
-
-        for f in filters:
-            col = f.attribute[0]
-            if isinstance(f, EqualTo) and bloom_excludes(col, [f.value]):
-                return False
-            if isinstance(f, In) and bloom_excludes(col, list(f.value)):
-                return False
-            rng = group_stats.get(col)
-            if not isinstance(rng, list) or len(rng) != 2:
-                continue
-            lo, hi = rng
-            if lo is None or hi is None:
-                continue
-            try:
-                if isinstance(f, EqualTo):
-                    if not (lo <= f.value <= hi):
-                        return False
-                elif isinstance(f, In):
-                    if not any(lo <= v <= hi for v in f.value):
-                        return False
-                elif isinstance(f, GreaterThan):
-                    if hi <= f.value:
-                        return False
-                elif isinstance(f, GreaterThanOrEqual):
-                    if hi < f.value:
-                        return False
-                elif isinstance(f, LessThan):
-                    if lo >= f.value:
-                        return False
-                elif isinstance(f, LessThanOrEqual):
-                    if lo > f.value:
-                        return False
-            except TypeError:
-                continue  # incomparable literal: keep the group
-        return True
+    pushFilters = _push_filters
 
 
 class VersionedSnapshotBatchReader(DataSourceReader):
@@ -865,21 +771,22 @@ class VersionedSnapshotBatchReader(DataSourceReader):
     physical columns (measured 12x on a 2-of-22-column projection;
     on object storage the unfetched bytes are the real win)."""
 
-    _prune_filters: list = []
-
-    def __init__(self, root: str, schema: StructType, version: int):
+    def __init__(
+        self, root: str, schema: StructType, version: int, ranges=(), points=()
+    ):
         self._root = root
         self._schema_json = schema.json()
         self._version = version
+        self._ranges = list(ranges)
+        self._points = list(points)
 
     def partitions(self) -> Sequence[InputPartition]:
-        from .versioned import VersionedTable
-
         return _snapshot_partitions(
             VersionedTable(self._root),
             self._version,
             self._schema_json,
-            self._prune_filters or None,
+            self._ranges,
+            self._points,
             bare=True,
         )
 
@@ -888,62 +795,21 @@ class VersionedSnapshotBatchReader(DataSourceReader):
 
 
 class PruningSnapshotBatchReader(VersionedSnapshotBatchReader):
-    """The snapshot reader plus manifest-stats pruning driven by
-    Catalyst's own filter pushdown — same opt-in
-    (``.option("pushdown", "true")`` + the session filterPushdown
-    conf) and the same superset-only skipping semantics as
-    PruningFeedBatchReader: groups whose min/max ranges (or bloom
-    probes, for point predicates) PROVE no match are never planned;
-    every filter returns residual so Spark still applies the exact
-    row predicate."""
+    """The snapshot reader plus skipping driven by Catalyst's own
+    filter pushdown — the same opt-in and body as
+    PruningFeedBatchReader."""
 
-    def __init__(self, root: str, schema: StructType, version: int):
-        super().__init__(root, schema, version)
-        self._explicit_prune: list = []
-        self._prune_filters: list = []
-
-    def pushFilters(self, filters):
-        from pyspark.sql.datasource import (
-            EqualTo,
-            GreaterThan,
-            GreaterThanOrEqual,
-            In,
-            LessThan,
-            LessThanOrEqual,
-        )
-
-        usable = (
-            EqualTo,
-            GreaterThan,
-            GreaterThanOrEqual,
-            In,
-            LessThan,
-            LessThanOrEqual,
-        )
-        # UNION with any caller-declared prune bound (AND semantics),
-        # same rule as the feed's pushFilters
-        self._prune_filters = list(self._explicit_prune) + [
-            f
-            for f in filters
-            if isinstance(f, usable) and len(f.attribute) == 1
-        ]
-        return filters  # all residual: skipping is superset-only
+    pushFilters = _push_filters
 
 
-class ExplicitPruneSnapshotBatchReader(VersionedSnapshotBatchReader):
-    """Snapshot reader plus CALLER-DECLARED stats pruning
-    (``.option("prune", '[[col, lo, hi], ...]')``) for vanilla
-    sessions without the filterPushdown conf — no pushFilters
-    implementation, same shared partitions() skipping."""
-
-
-class ExplicitPruneFeedBatchReader(VersionedFeedBatchReader):
-    """The bounded reader plus CALLER-DECLARED stats pruning
-    (.option("prune", '[[col, lo, hi], ...]')) — the vanilla-session
-    twin of PruningFeedBatchReader: same shared partitions() skipping,
-    no pushFilters implementation, so it needs no
-    spark.sql.python.filterPushdown conf. The consumer still applies
-    its exact filter (superset guarantee)."""
+def build_batch_reader(options, cls, pushdown_cls, *args, **kw):
+    """The batch reader the ``pushdown`` and ``prune`` options ask for:
+    ``pushdown_cls`` when ``pushdown`` is "true", else ``cls``, either
+    way built with the ``prune`` option's bounds."""
+    if str(options.get("pushdown", "")).lower() == "true":
+        cls = pushdown_cls
+    ranges, points = _parse_prune(options.get("prune"))
+    return cls(*args, ranges=ranges, points=points, **kw)
 
 
 class VersionedTableStreamReader(VersionedFeedStreamReader):
@@ -995,8 +861,6 @@ def _version_before_timestamp(root: str, ts: float) -> int:
     record reads on a long streaming-ingest history, not a full-log
     walk; a pre-clamp history with a proven stamp inversion falls back
     to the linear prefix-max walk (versioned._bisect_stamps)."""
-    from .versioned import VersionedTable
-
     t = VersionedTable(root)
     best = t._bisect_stamps(t.versions(), ts, "last_lt")
     return -1 if best is None else best
@@ -1032,17 +896,15 @@ def build_stream_reader(
     mbpt = options.get("maxbytespertrigger")
     if mbpt is not None and int(mbpt) < 1:
         raise ValueError("maxBytesPerTrigger must be >= 1")
-    prune_raw = options.get("prune")
-    prune = (
-        _prune_triples_to_filters(json.loads(prune_raw)) if prune_raw else None
-    )
+    ranges, points = _parse_prune(options.get("prune"))
     cls = reader_cls or VersionedFeedStreamReader
     return cls(
         root,
         schema,
         start,
         int(mvpt) if mvpt is not None else None,
-        prune,
+        ranges,
+        points,
         initial_snapshot=snap,
         skip_change_commits=(
             str(options.get("skipchangecommits", "")).lower() == "true"
@@ -1068,8 +930,6 @@ class VersionedFeedDataSource(DataSource):
         return resolve_table_root(root)
 
     def schema(self) -> StructType:
-        from .versioned import VersionedTable
-
         t = VersionedTable(self._root())
         lv = t.latest_version()
         if lv is None:
@@ -1102,33 +962,19 @@ class VersionedFeedDataSource(DataSource):
         return build_stream_reader(self.options, self._root(), schema)
 
     def reader(self, schema: StructType) -> VersionedFeedBatchReader:
-        since = int(self.options.get("sinceversion", -1))
         to_raw = self.options.get("toversion")
-        cls = (
-            PruningFeedBatchReader
-            if str(self.options.get("pushdown", "")).lower() == "true"
-            else VersionedFeedBatchReader
+        return build_batch_reader(
+            self.options,
+            VersionedFeedBatchReader,
+            PruningFeedBatchReader,
+            self._root(),
+            schema,
+            int(self.options.get("sinceversion", -1)),
+            int(to_raw) if to_raw is not None else None,
+            skip_change_commits=(
+                str(self.options.get("skipchangecommits", "")).lower() == "true"
+            ),
         )
-        prune_raw = self.options.get("prune")
-        if prune_raw and cls is VersionedFeedBatchReader:
-            # explicit caller-declared bound — works on VANILLA
-            # sessions (ExplicitPruneFeedBatchReader implements no
-            # pushFilters, so no filterPushdown conf is needed)
-            cls = ExplicitPruneFeedBatchReader
-        r = cls(
-            self._root(), schema, since, int(to_raw) if to_raw is not None else None
-        )
-        if str(self.options.get("skipchangecommits", "")).lower() == "true":
-            r._skip_changes = True
-        if prune_raw:
-            explicit = _prune_triples_to_filters(json.loads(prune_raw))
-            r._prune_filters = explicit
-            if isinstance(r, PruningFeedBatchReader):
-                # pushFilters unions the pushed query filters with the
-                # caller-declared bound instead of clobbering it — both
-                # skipping bounds apply (AND)
-                r._explicit_prune = explicit
-        return r
 
 
 def register_feed_source(spark) -> None:
@@ -1184,8 +1030,6 @@ def drain_available_now(
     looping forever). To drain only up to a snapshot pinned at call
     time, capture ``latest_version()`` yourself and stop the writer
     first."""
-    from .versioned import VersionedTable
-
     table = VersionedTable(table_root)
     pos = prev = None
     for i in range(max_runs):

@@ -54,6 +54,7 @@ import os
 import shutil
 import time
 import uuid
+from decimal import Decimal, InvalidOperation
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
@@ -143,7 +144,7 @@ def _stamp_protocol(
 
 # --- change-feed action classification -----------------------------------
 # EVERY action string a commit path can write must appear in exactly one
-# of these sets — they are the single source of truth for read_changes /
+# of these sets — they are the single source of truth for feed_slices /
 # read_change_feed, and tests/test_versioned.py's meta-test AST-scans the
 # module's _commit call sites against them. Without that closed-world
 # check, a future commit path with a new action string would wedge feed
@@ -242,6 +243,90 @@ def _as_datetime(col: str, v: object) -> _dt.datetime:
         f"prune bound {v!r} for temporal column {col!r} is not a date, "
         "datetime or ISO string"
     )
+
+
+def _stat_types(schema_json: str) -> dict[str, str]:
+    """Column name -> type name from a record's schema JSON, every
+    decimal precision folded to ``"decimal"`` — the ordering the
+    skipping rule compares a column's bounds and stats under."""
+    out = {}
+    for f in json.loads(schema_json)["fields"]:
+        t = f["type"]
+        if isinstance(t, dict):
+            t = t["type"]
+        out[f["name"]] = "decimal" if t.startswith("decimal") else t
+    return out
+
+
+def _ordered(col: str, typ: str | None, v: object) -> object:
+    """A prune bound or stat in its column type's order: dates and
+    timestamps as datetimes, decimals as ``Decimal`` (the manifest
+    JSON-stringifies both), anything else as is; None stays None."""
+    if v is None:
+        return None
+    if typ in ("date", "timestamp", "timestamp_ntz"):
+        return _as_datetime(col, v)
+    if typ == "decimal" and not isinstance(v, Decimal):
+        try:
+            return Decimal(str(v))
+        except InvalidOperation:
+            raise ValueError(
+                f"prune bound {v!r} for decimal column {col!r} is not a number"
+            ) from None
+    return v
+
+
+def _group_may_match(
+    stats: dict,
+    types: dict[str, str],
+    ranges=(),
+    points=(),
+) -> bool:
+    """THE data-skipping rule: may a file group with manifest ``stats``
+    hold a row matching every ``(col, lo, hi)`` range and every
+    ``(col, values)`` point? ``types`` (``_stat_types``) orders each
+    column's bounds and stats; a None bound is an open end. A group is
+    dropped only when its stats PROVE no row can match — its [min, max]
+    misses a range, or its bloom for a point's column holds none of the
+    values. Missing stats, a NULL min/max or no bloom keep it. Raises a
+    ValueError naming the column for bounds that cannot be compared, a
+    ValueError for a NULL point, and a TypeError for a probe type the
+    bloom cannot hash."""
+    for col, values in points:
+        if any(v is None for v in values):
+            # the build side never indexes NULL keys, so a NULL probe
+            # would prune groups that DO hold NULL rows
+            raise ValueError(
+                "bloom point lookup of NULL is not supported; "
+                "use a full read with an IS NULL filter"
+            )
+        b = (stats.get(_BLOOM_KEY) or {}).get(col)
+        if b:
+            bits = base64.b64decode(b["b64"])
+            if not any(
+                all(
+                    (bits[p // 8] >> (p % 8)) & 1
+                    for p in _bloom_positions_py(v, b["m"], b["k"])
+                )
+                for v in values
+            ):
+                return False
+    for col, lo, hi in ranges:
+        typ = types.get(col)
+        lo, hi = _ordered(col, typ, lo), _ordered(col, typ, hi)
+        s = stats.get(col)
+        if not s or s[0] is None or s[1] is None:
+            continue
+        flo, fhi = _ordered(col, typ, s[0]), _ordered(col, typ, s[1])
+        try:
+            if (lo is not None and fhi < lo) or (hi is not None and flo > hi):
+                return False
+        except (TypeError, InvalidOperation):
+            raise ValueError(
+                f"prune bounds ({lo!r}, {hi!r}) are not comparable "
+                f"with the stats of column {col!r}"
+            ) from None
+    return True
 
 
 def _bloom_positions_py(value: object, m: int = _BLOOM_M, k: int = _BLOOM_K) -> list[int]:
@@ -1981,78 +2066,33 @@ class VersionedTable:
         [min, max] for col cannot overlap [lo, hi]; groups without
         stats for col are conservatively kept. A LIST of such tuples
         prunes conjunctively (every predicate must overlap) — the
-        multi-dimension case z-ordered layouts exist for.
+        multi-dimension case z-ordered layouts exist for. Bounds are
+        ordered by the column's type (ISO strings, dates and datetimes
+        on temporal columns; decimals numerically); None is an open end.
 
         ``point=(col, value)`` additionally consults the bloom index
         (groups written with ``bloom_cols``): a group whose bloom
         provably excludes ``value`` is dropped. Same conservative
         contract — no bloom for col, or a bloom hit (including false
         positives), keeps the group; absence of the key is the only
-        thing a bloom can prove."""
+        thing a bloom can prove. Every decision is ``_group_may_match``."""
         if version is None:
             version = self.latest_version()
         if version is None:
             raise ValueError(f"table {self.root} has no committed version")
         m = self._manifest(version)
-        files = m["files"]
-        preds = [prune] if isinstance(prune, tuple) else (prune or [])
-        stats = m.get("stats", {})
+        ranges = [prune] if isinstance(prune, tuple) else (prune or [])
         points = [point] if isinstance(point, tuple) else (point or [])
-        for col, val in points:
-            if val is None:
-                # the build side never indexes NULL keys, so a NULL
-                # probe would prune groups that DO hold NULL rows —
-                # reject instead of silently returning a wrong subset
-                raise ValueError(
-                    "bloom point lookup of NULL is not supported; "
-                    "use a full read with an IS NULL filter"
-                )
-
-            def bloom_may_contain(f: str, col=col, val=val) -> bool:
-                b = stats.get(f, {}).get(_BLOOM_KEY, {}).get(col)
-                if not b:
-                    return True  # unindexed group -> can't prune safely
-                bits = base64.b64decode(b["b64"])
-                return all(
-                    (bits[p // 8] >> (p % 8)) & 1
-                    for p in _bloom_positions_py(val, b["m"], b["k"])
-                )
-
-            files = [f for f in files if bloom_may_contain(f)]
-        types = (
-            {
-                f.name: f.dataType.typeName()
-                for f in StructType.fromJson(json.loads(m["schema"])).fields
-            }
-            if preds
-            else {}
-        )
-        for col, lo, hi in preds:
-            temporal = types.get(col) in ("date", "timestamp", "timestamp_ntz")
-            if temporal:
-                lo, hi = _as_datetime(col, lo), _as_datetime(col, hi)
-
-            def overlaps(f: str, col=col, lo=lo, hi=hi) -> bool:
-                s = stats.get(f, {}).get(col)
-                if not s or s[0] is None or s[1] is None:
-                    return True  # no stats -> can't prune safely
-                flo, fhi = s
-                if temporal:
-                    # JSON-stringified once reloaded, date/datetime
-                    # objects on the committing handle: one ordering
-                    flo, fhi = _as_datetime(col, flo), _as_datetime(col, fhi)
-                elif isinstance(flo, str):
-                    lo, hi = str(lo), str(hi)
-                try:
-                    return not (fhi < lo or flo > hi)
-                except TypeError:
-                    raise ValueError(
-                        f"prune bounds ({lo!r}, {hi!r}) are not comparable "
-                        f"with the stats of column {col!r}"
-                    ) from None
-
-            files = [f for f in files if overlaps(f)]
-        return files
+        if not ranges and not points:
+            return m["files"]
+        stats = m.get("stats") or {}
+        types = _stat_types(m["schema"]) if ranges else {}
+        points = [(col, [val]) for col, val in points]
+        return [
+            f
+            for f in m["files"]
+            if _group_may_match(stats.get(f) or {}, types, ranges, points)
+        ]
 
     def restore(self, version: int) -> int:
         """Delta RESTORE analog: make snapshot ``version`` current
@@ -2869,51 +2909,6 @@ class VersionedTable:
             .drop("__dv_file", "__dv_idx")
         )
 
-    def read_changes(
-        self, spark: SparkSession, since_version: int, to_version: int | None = None
-    ) -> DataFrame:
-        """Change feed: rows ADDED by commits in (since_version,
-        to_version] — the incremental-consumption API (Delta CDF's
-        append slice). Well-defined for append/append_clustered
-        commits, whose file groups are disjoint additions; an
-        overwrite/upsert/compact inside the range raises (those
-        rewrite the file set, so 'added rows' is not derivable from
-        manifests alone — a full CDF would log per-row change types).
-        """
-        if to_version is None:
-            to_version = self.latest_version()
-        if to_version is None or since_version > to_version:
-            raise ValueError("empty or invalid version range")
-        base = set(self._manifest(since_version)["files"]) if since_version >= 0 else set()
-        new_files: list[str] = []
-        for v in self.versions():
-            if since_version < v <= to_version:
-                m = self._manifest(v)
-                if m["action"] in _FEED_ROW_PRESERVING:
-                    # row-preserving rewrites: same rows, new files —
-                    # contribute nothing, just move the file baseline
-                    # (without this, routine compaction walls the feed)
-                    base = set(m["files"])
-                    continue
-                if m["action"] not in _FEED_ALL_ACTIONS:
-                    raise ValueError(
-                        f"version {v} has unclassified commit action "
-                        f"{m['action']!r}: add it to the feed classification "
-                        "sets in storage/versioned.py"
-                    )
-                if m["action"] not in _FEED_INSERT_ACTIONS:
-                    raise ValueError(
-                        f"version {v} is {m['action']!r}: change feed is only "
-                        "derivable across pure appends"
-                    )
-                new_files.extend(f for f in m["files"] if f not in base)
-                base.update(m["files"])
-        if not new_files:
-            m = self._manifest(to_version)
-            schema = StructType.fromJson(json.loads(m["schema"]))
-            return spark.createDataFrame([], schema)
-        return self._read_files(spark, to_version, new_files)
-
     def feed_slices(
         self,
         since_version: int,
@@ -3222,11 +3217,11 @@ class VersionedTable:
             probe_cols.append(k)
             prune.append((k, row[f"__lo_{i}"], row[f"__hi_{i}"]))
         cands = self.snapshot_files(version, prune or None)
+        points = []
         for k in probe_cols:
-            bloomed = [
-                f for f in cands if stats.get(f, {}).get(_BLOOM_KEY, {}).get(k)
-            ]
-            if not bloomed:
+            if not any(
+                stats.get(f, {}).get(_BLOOM_KEY, {}).get(k) for f in cands
+            ):
                 continue
             vals = (
                 source.select(k)
@@ -3234,22 +3229,16 @@ class VersionedTable:
                 .limit(_MERGE_BLOOM_PROBE_MAX + 1)
                 .collect()
             )
-            if len(vals) > _MERGE_BLOOM_PROBE_MAX:
-                continue  # too many keys for a driver-side probe loop
-            drop = set()
-            for f in bloomed:
-                b = stats[f][_BLOOM_KEY][k]
-                bits = base64.b64decode(b["b64"])
-                if not any(
-                    all(
-                        (bits[p // 8] >> (p % 8)) & 1
-                        for p in _bloom_positions_py(r[k], b["m"], b["k"])
-                    )
-                    for r in vals
-                ):
-                    drop.add(f)  # provably holds NONE of the source keys
-            if drop:
-                cands = [f for f in cands if f not in drop]
+            if len(vals) <= _MERGE_BLOOM_PROBE_MAX:
+                # point-lookup sized: a group whose bloom holds NONE of
+                # the source keys is dropped
+                points.append((k, [r[k] for r in vals]))
+        if points:
+            cands = [
+                f
+                for f in cands
+                if _group_may_match(stats.get(f) or {}, {}, (), points)
+            ]
         return cands, False
 
     def _merge_prepare(

@@ -244,11 +244,31 @@ def _two_day_table(spark, root):
     return t, day1, day5
 
 
+def _format_read(spark, fmt, root, prune=None, **options):
+    """``spark.read.format(fmt)`` over the table at ``root``, with the
+    ``prune`` option when given."""
+    from netflow_analysis_with_spark_streaming_spark.storage.stream_sink import (
+        register_table_sink,
+    )
+    from netflow_analysis_with_spark_streaming_spark.storage.stream_source import (
+        register_feed_source,
+    )
+
+    register_table_sink(spark)
+    register_feed_source(spark)
+    reader = spark.read.format(fmt).option("path", root)
+    if prune is not None:
+        reader = reader.option("prune", json.dumps(prune))
+    return reader.options(**options).load()
+
+
 @pytest.mark.parametrize("fresh_handle", [False, True])
 def test_prune_string_and_datetime_bounds_on_datetime_stats(spark, tmp_path, fresh_handle):
     """Stats on a timestamp column are datetimes on the committing
     handle and ISO strings once reloaded; string, datetime and date
-    bounds prune the same way against both."""
+    bounds prune the same way against both, and the string bounds
+    prune the ``versioned_table`` and ``versioned_feed`` data sources
+    to exactly the groups ``snapshot_files`` keeps."""
     t, day1, day5 = _two_day_table(spark, str(tmp_path / "t"))
     if fresh_handle:
         t = VersionedTable(t.root)
@@ -264,6 +284,20 @@ def test_prune_string_and_datetime_bounds_on_datetime_stats(spark, tmp_path, fre
     # the exact-match boundary: 01:00:02 is the last row of day 1
     assert t.snapshot_files(prune=("ts", "2024-03-01 01:00:02", "2024-03-04")) == [day1]
     assert t.read(spark, prune=("ts", "2024-03-05", "2024-03-06")).count() == 3
+    for lo, hi in [
+        ("2024-03-01", "2024-03-02"),
+        ("2024-03-01T00:00:00", "2024-03-01 23:59:59.999999"),
+        ("2024-03-04", "2024-03-06T00:00:00"),
+    ]:
+        kept = t.snapshot_files(prune=("ts", lo, hi))
+        want = sorted(
+            (r["day"], r["x"])
+            for r in t._read_groups(spark, t.latest_version(), kept).collect()
+        )
+        assert len(want) == 3, (lo, hi)
+        for fmt in ("versioned_table", "versioned_feed"):
+            got = _format_read(spark, fmt, t.root, [["ts", lo, hi]]).collect()
+            assert sorted((r["day"], r["x"]) for r in got) == want, (fmt, lo, hi)
 
 
 def test_prune_bounds_that_cannot_compare_raise_naming_the_column(spark, tmp_path):
@@ -272,6 +306,60 @@ def test_prune_bounds_that_cannot_compare_raise_naming_the_column(spark, tmp_pat
         t.snapshot_files(prune=("ts", "yesterday", "2024-03-02"))
     with pytest.raises(ValueError, match="'x'"):
         t.snapshot_files(prune=("x", dt.date(2024, 3, 1), 5))
+
+
+def test_skipping_rule_keeps_every_matching_row(spark, tmp_path):
+    """Every reader skips groups through the one rule, so none loses a
+    row that matches. Timestamp groups 05:00-10:00 and 23:00-01:00(+1d)
+    under a one-day ISO ``T`` bound: ``VersionedTable.read`` and both
+    data sources return the same 3 rows. Decimal stats reload as
+    strings ("9.50", "10.25") and still order as numbers: the decimal
+    bound keeps its group on the committing and on a fresh handle."""
+    from decimal import Decimal
+
+    t = VersionedTable(str(tmp_path / "ts"))
+    day = dt.datetime(2024, 1, 1)
+    for hours in ([5, 10], [23, 25]):
+        rows = [(day + dt.timedelta(hours=h),) for h in hours]
+        t.append(spark.createDataFrame(rows, "ts timestamp"), stats_cols=["ts"])
+    lo, hi = "2024-01-01T00:00:00", "2024-01-01T23:59:59"
+    exact = "ts BETWEEN '2024-01-01 00:00:00' AND '2024-01-01 23:59:59'"
+    assert t.read(spark, prune=("ts", lo, hi)).filter(exact).count() == 3
+    for fmt in ("versioned_table", "versioned_feed"):
+        got = _format_read(spark, fmt, t.root, [["ts", lo, hi]]).filter(exact)
+        assert got.count() == 3, fmt
+
+    d = VersionedTable(str(tmp_path / "d"))
+    d.append(
+        spark.createDataFrame(
+            [(Decimal("9.50"),), (Decimal("10.25"),)], "d decimal(10,2)"
+        ),
+        stats_cols=["d"],
+    )
+    d.append(
+        spark.createDataFrame([(Decimal("20.00"),)], "d decimal(10,2)"),
+        stats_cols=["d"],
+    )
+    bound = ("d", Decimal("9"), Decimal("11"))
+    for handle in (d, VersionedTable(d.root)):
+        assert len(handle.snapshot_files(prune=bound)) == 1
+        got = handle.read(spark, prune=bound).filter("d BETWEEN 9 AND 11")
+        assert got.count() == 2
+
+
+def test_empty_batch_plans_read_zero_rows(spark, tmp_path):
+    """A batch plan with no partition makes Spark call ``read(None)``:
+    a ``versioned_table`` read whose prune bound excludes every group,
+    and a ``versioned_feed`` window starting at the latest version,
+    both read 0 rows."""
+    t, _, _ = _two_day_table(spark, str(tmp_path / "t"))
+    assert t.snapshot_files(prune=("x", 100, 200)) == []
+    pruned = _format_read(spark, "versioned_table", t.root, [["x", 100, 200]])
+    assert pruned.collect() == []
+    window = _format_read(
+        spark, "versioned_feed", t.root, sinceVersion=str(t.latest_version())
+    )
+    assert window.collect() == []
 
 
 # --- late rows in the window rollup ---------------------------------------

@@ -396,7 +396,7 @@ def test_path_option_accepts_file_uri(spark, tmp_path):
     remains the SQL route (FORMAT.md)."""
     import pytest as _pytest
 
-    from netflow_analysis_with_spark_streaming_spark.storage.stream_source import (
+    from netflow_analysis_with_spark_streaming_spark.storage.versioned import (
         resolve_table_root,
     )
 

@@ -697,7 +697,6 @@ def test_stream_prune_option_skips_groups(spark, tmp_path):
 
     from netflow_analysis_with_spark_streaming_spark.storage.stream_source import (
         VersionedFeedStreamReader,
-        _prune_triples_to_filters,
     )
 
     t = VersionedTable(str(tmp_path / "t"))
@@ -711,8 +710,7 @@ def test_stream_prune_option_skips_groups(spark, tmp_path):
     # white-box: planned partitions shrink to the overlapping group
     full = VersionedFeedStreamReader(t.root, t_schema(t), -1)
     pruned = VersionedFeedStreamReader(
-        t.root, t_schema(t), -1,
-        prune_filters=_prune_triples_to_filters([["k", 0, 99]]),
+        t.root, t_schema(t), -1, ranges=[("k", 0, 99)]
     )
     window = ({"version": -1}, {"version": 1})
 
@@ -957,17 +955,11 @@ def test_bounded_readers_resolve_window_end_once(spark, tmp_path, monkeypatch):
         spark.read.format(FORMAT_NAME).option("path", t.root).load().schema
     )
     data_schema = ss._data_schema(schema)
-    for cls in (
-        ss.VersionedFeedBatchReader,
-        ss.PruningFeedBatchReader,
-        ss.ExplicitPruneFeedBatchReader,
-    ):
-        seen.clear()
-        r = cls(t.root, data_schema, -1, None)
-        if cls is not ss.VersionedFeedBatchReader:
-            r._prune_filters = ss._prune_triples_to_filters([["k", 0, 99]])
-        r.partitions()
-        assert seen == [t.latest_version()], cls.__name__
+    for cls in (ss.VersionedFeedBatchReader, ss.PruningFeedBatchReader):
+        for ranges in ((), [("k", 0, 99)]):
+            seen.clear()
+            cls(t.root, data_schema, -1, None, ranges=ranges).partitions()
+            assert seen == [t.latest_version()], (cls.__name__, ranges)
 
 
 def test_feed_planning_is_o_change_on_delta_history(spark, tmp_path, monkeypatch):
@@ -1004,9 +996,7 @@ def test_feed_planning_is_o_change_on_delta_history(spark, tmp_path, monkeypatch
     fresh = VersionedTable(t.root)
     slices = fresh.feed_slices(-1)
     assert [v for v, _, _ in slices] == [0, 1, 2, 3]
-    pruned = ss._prune_slices(
-        fresh, slices, ss._prune_triples_to_filters([["k", 0, 99]])
-    )
+    pruned = ss._prune_slices(fresh, slices, ranges=[("k", 0, 99)])
     assert sum(len(g) for _, _, g in pruned) == 1  # stats_set pruned 3/4
     register_feed_source(spark)
     got = (

@@ -241,20 +241,23 @@ def test_schema_evolution_additive(spark, tmp_path):
 
 
 def test_change_feed_returns_appended_slices(spark, tmp_path):
-    """read_changes yields exactly the rows added in the version
-    range; rewriting actions inside the range raise."""
+    """read_change_feed yields exactly the rows added in the version
+    range, as inserts; an uncaptured upsert inside the range raises."""
     t = VersionedTable(str(tmp_path / "t"))
     t.append(spark.createDataFrame([(1, "a")], "k long, v string"))   # v0
     t.append(spark.createDataFrame([(2, "b")], "k long, v string"))   # v1
     t.append(spark.createDataFrame([(3, "c")], "k long, v string"))   # v2
-    got = sorted(r["k"] for r in t.read_changes(spark, since_version=0).collect())
-    assert got == [2, 3]
-    assert [r["k"] for r in t.read_changes(spark, 1, 2).collect()] == [3]
+    got = sorted(
+        (r["k"], r["_change_type"], r["_commit_version"])
+        for r in t.read_change_feed(spark, since_version=0).collect()
+    )
+    assert got == [(2, "insert", 1), (3, "insert", 2)]
+    assert [r["k"] for r in t.read_change_feed(spark, 1, 2).collect()] == [3]
     t.upsert(spark, spark.createDataFrame([(1, "A")], "k long, v string"), keys=["k"])
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="change feed"):
-        t.read_changes(spark, since_version=2)
+        t.read_change_feed(spark, since_version=2)
 
 
 def test_zorder_prunes_both_dimensions(spark, tmp_path):
@@ -630,7 +633,7 @@ def test_delete_where_semantics_and_time_travel(spark, tmp_path):
     assert t.read(spark, version=0).count() == 30  # time travel intact
     assert t.history()[-1]["action"] == "delete"
     with pytest.raises(ValueError, match="change feed"):
-        t.read_changes(spark, since_version=-1)
+        t.read_change_feed(spark, since_version=-1)
 
 
 def test_delete_where_prunes_untouched_groups(spark, tmp_path):
@@ -946,7 +949,6 @@ def test_review_fixes_storage(spark, tmp_path):
         (1, "insert"),
         (2, "insert"),
     ]
-    assert sorted(r["k"] for r in tf.read_changes(spark, -1).collect()) == [1, 2]
 
 
 def test_ivm_null_keys_and_compaction_compose(spark, tmp_path):
@@ -1885,6 +1887,53 @@ def test_every_commit_action_is_feed_classified():
     assert classified <= committed, (
         f"classification entries with no commit site: {classified - committed}"
     )
+
+
+def test_skipping_rule_has_one_home():
+    """Closed-world meta-test over data skipping: every file-group
+    prune decision is versioned._group_may_match. AST-scan the storage
+    modules: none but versioned.py may reference the bloom probe
+    (_bloom_positions_py) or the bloom stats key (_BLOOM_KEY), and
+    inside versioned.py the probe has exactly one call site, in the
+    rule — so a second copy of the rule cannot come back unnoticed."""
+    import ast
+    import pathlib
+
+    from netflow_analysis_with_spark_streaming_spark.storage import versioned
+
+    guarded = {"_bloom_positions_py", "_BLOOM_KEY"}
+
+    def names(node):
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                yield n.id
+            elif isinstance(n, ast.Attribute):
+                yield n.attr
+            elif isinstance(n, ast.alias):
+                yield n.name
+
+    pkg = pathlib.Path(versioned.__file__).parent
+    modules = sorted(pkg.glob("*.py"))
+    assert len(modules) > 2, "no storage modules found — scan is broken"
+    offenders = [
+        (p.name, n)
+        for p in modules
+        if p.name != "versioned.py"
+        for n in names(ast.parse(p.read_text()))
+        if n in guarded
+    ]
+    assert not offenders, f"skipping logic outside versioned.py: {offenders}"
+    tree = ast.parse(pathlib.Path(versioned.__file__).read_text())
+    owners = [
+        fn.name
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef)
+        for n in ast.walk(fn)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Name)
+        and n.func.id == "_bloom_positions_py"
+    ]
+    assert owners == ["_group_may_match"], owners
 
 
 # --- deletion vectors (merge-on-read DELETE) ---------------------------
