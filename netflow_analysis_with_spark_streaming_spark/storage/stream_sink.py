@@ -80,9 +80,11 @@ Semantics and fail-closed edges:
   other expression refuses at creation with the foreachBatch path
   named — the subset stays tiny because a general shadow SQL
   evaluator is how engines grow silent divergence.
-- **Conflict handling**: the published version is a blind append, so
-  losing a commit race auto-resolves by re-pinning and re-publishing
-  the same staged groups (bounded retries), exactly like ``append``.
+- **Conflict handling**: an append batch is a blind add, so losing a
+  commit race auto-resolves by re-pinning and re-publishing the same
+  staged groups (bounded retries), exactly like ``append``. A
+  ``mode("overwrite")`` batch replaces the snapshot it pinned, so a
+  lost race fails closed with ``CommitConflictError``.
 
 Options: ``path`` (table root, required), ``statsCols`` (csv of
 columns to record min/max for; default = every orderable primitive

@@ -55,6 +55,7 @@ import shutil
 import time
 import uuid
 from decimal import Decimal, InvalidOperation
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
@@ -969,8 +970,8 @@ class VersionedTable:
         self, version: int | None
     ) -> tuple[dict[str, str], list[str]]:
         """(column_mapping, retired_physical) of snapshot ``version``
-        in canonical form — the pair whose IDENTITY append's conflict
-        retry and _rebase_rewrite's walk both require: files written
+        in canonical form — the pair whose IDENTITY the blind-add and
+        rewrite rebase policies both require: files written
         under one mapping must never be published under another."""
         if version is None or version < 0:
             return {}, []
@@ -1004,7 +1005,7 @@ class VersionedTable:
         # names readers prune with. Default mapping = the current
         # snapshot's: safe under races because every publish path
         # requires mapping identity — rewrites via _rebase_rewrite's
-        # walk, appends via the retry loop's _mapping_identity check
+        # walk, appends via _blind_add's _mapping_identity check
         # (which re-writes the group under the fresh mapping when a
         # rename/drop won the race) — so a published commit's files
         # always used its parent's mapping.
@@ -1291,10 +1292,10 @@ class VersionedTable:
                 return w[chain[max(chain.index(on), chain.index(nn))]]
         return None
 
-    def _evolved_schema_json(self, df: DataFrame, version: int) -> str:
+    def _evolved_schema_json_of(self, incoming: StructType, version: int) -> str:
         """Append-path schema evolution (Delta mergeSchema-on-write):
         the committed manifest schema becomes the UNION of the current
-        table schema and the incoming frame's — existing columns keep
+        table schema and the incoming one — existing columns keep
         their position and widen along the numeric chains, net-new
         columns append, columns the frame omits are carried (their
         rows read NULL from the new files via mergeSchema). A shared
@@ -1302,16 +1303,9 @@ class VersionedTable:
         with every conflicting column named, and nothing is written.
         Also the reason the manifest schema (and therefore the feed
         stream's schema and empty-result schemas) never NARROWS when
-        a producer appends a column subset."""
-        if version == 0:
-            return df.schema.json()
-        return self._evolved_schema_json_of(df.schema, version)
-
-    def _evolved_schema_json_of(self, incoming: StructType, version: int) -> str:
-        """Schema-based twin of ``_evolved_schema_json`` — pure
-        metadata work (no DataFrame, no SparkSession), which is what
-        lets the native streaming sink's driver-side commit evolve the
-        manifest schema from inside a data-source worker process."""
+        a producer appends a column subset. Pure metadata work (no
+        DataFrame, no SparkSession), so the native streaming sink's
+        driver-side commit runs it inside a data-source worker."""
         if version == 0:
             return incoming.json()
         prev_m = self._manifest(version - 1)
@@ -1383,33 +1377,112 @@ class VersionedTable:
 
     # --- table operations --------------------------------------------------
 
-    def _resolve_conflict(
-        self, batch_id: int | None, err: "CommitConflictError"
-    ) -> int:
-        """Called when a commit lost the version race. If the SAME
-        streaming batch was meanwhile committed by the concurrent
-        writer (duplicate foreachBatch replay racing itself), the
-        operation's intent is already durable — resolve to a no-op.
-        Any other conflict propagates: the caller's snapshot is stale
-        and only the caller knows how to rebuild its commit."""
-        if batch_id is not None and batch_id in self.committed_batch_ids():
-            return self.latest_version()
-        raise err
-
-    def _rebase_rewrite(
+    def _publish(
         self,
-        err: "CommitConflictError",
-        batch_id: int | None,
-        attempt_version: int,
+        action: str,
         files: list[str],
         stats: dict,
         schema_json: str,
+        version: int,
+        batch_id: int | None = None,
+        *,
+        rebase=None,
+        **commit_kw,
+    ) -> int:
+        """The one lost-race loop every commit goes through; ``_commit``
+        is the one-attempt primitive (looked up per attempt, so a test
+        can wrap it on the handle to inject a race). A loss to a commit
+        of the SAME batch id (a replay racing itself) is a no-op that
+        drops this attempt's own unpublished groups. Otherwise
+        ``rebase(err, files, stats, schema_json, version)`` returns the
+        next attempt or raises — the policy is chosen by what the
+        commit read: ``_blind_add`` (nothing), ``_rebase_rewrite``
+        (some groups), or None: fail closed (it replaces the snapshot
+        it pinned)."""
+        for _ in range(10):
+            try:
+                return self._commit(
+                    files,
+                    action,
+                    schema_json,
+                    batch_id,
+                    stats=stats,
+                    version=version,
+                    **commit_kw,
+                )
+            except CommitConflictError as e:
+                if batch_id is not None and batch_id in self.committed_batch_ids():
+                    pinned = self._manifest(version - 1)["files"] if version else []
+                    self._drop_groups(set(files) - set(pinned))
+                    return self.latest_version()
+                if rebase is None:
+                    raise
+                files, stats, schema_json, version = rebase(
+                    e, files, stats, schema_json, version
+                )
+        raise CommitConflictError(
+            f"{action} on {self.root} lost 10 consecutive version races"
+        )
+
+    def _drop_groups(self, files) -> None:
+        """Delete this writer's own never-published file groups (a
+        manifest entry may name a clustered sub-path of its group)."""
+        for g in {self._group_of(f) for f in files}:
+            shutil.rmtree(os.path.join(self.root, g), ignore_errors=True)
+
+    def _blind_add(
+        self,
+        incoming: StructType,
+        new: list[str],
+        new_stats: dict,
+        identity: tuple[dict[str, str], list[str]],
+        rewrite=None,
+    ):
+        """Rebase policy of a BLIND ADD (the append family): it reads
+        nothing, so it commutes — re-pin the fresh snapshot, re-union
+        the schema against it, and carry the SAME written groups onto
+        it. The groups bind to the column mapping ``identity`` they
+        were written under; after a concurrent RENAME/DROP,
+        ``rewrite(fresh_mapping)`` re-writes them (Spark callers), and
+        without it (staged bytes, no SparkSession) the commit refuses."""
+
+        def rebase(*_lost):
+            nonlocal new, new_stats, identity
+            version, prev_files, prev_stats = self._snapshot_state()
+            fresh = self._mapping_identity(version - 1)
+            if fresh != identity and rewrite is None:
+                raise self._remap_refused()
+            schema_json = self._evolved_schema_json_of(incoming, version)
+            if fresh != identity:
+                self._drop_groups(new)
+                new, new_stats = rewrite(fresh[0])
+                identity = fresh
+            files = prev_files + new
+            return files, {**prev_stats, **new_stats}, schema_json, version
+
+        return rebase
+
+    def _remap_refused(self) -> ValueError:
+        return ValueError(
+            f"table {self.root} changed its column mapping while "
+            "the batch was being staged (concurrent RENAME/DROP "
+            "COLUMN): the staged files bind to the old physical "
+            "names — restart the stream to pin the new mapping"
+        )
+
+    def _rebase_rewrite(
+        self,
         would_read,
-    ) -> tuple[list[str], dict, str, int] | None:
-        """A REWRITING commit (merge/upsert/delete/replace_where) lost
-        the version race. Delta-style conflict resolution at the
-        Serializable level: the rewrite may rebase over the
-        interleaved commits iff
+        err: CommitConflictError,
+        files: list[str],
+        stats: dict,
+        schema_json: str,
+        attempt_version: int,
+    ) -> tuple[list[str], dict, str, int]:
+        """Rebase policy of a REWRITING commit (merge/upsert/delete/
+        delete_dv/replace_where/compact_where/analyze). Delta-style
+        conflict resolution at the Serializable level: the rewrite may
+        rebase over the interleaved commits iff
 
         (a) every one of them only ADDED file groups with no deletion-
             vector change — blind appends. A drop, rewrite, or DV
@@ -1424,22 +1497,19 @@ class VersionedTable:
             so we fail closed exactly like Delta's
             ConcurrentAppendException.
 
-        On success returns the FOLDED intent — our rewritten+carried
-        groups plus the winners' appended groups by reference, stats
-        merged, schema UNION (an append may have widened it), and the
-        next version to claim. Returns None when the loss was our own
-        streaming batch replay (the intent is already durable).
-        Re-raises ``err`` otherwise.
+        On success the next attempt is the FOLDED intent — our
+        rewritten+carried groups plus the winners' appended groups by
+        reference, stats merged, schema UNION (an append may have
+        widened it), and the next version to claim. Re-raises ``err``
+        otherwise.
 
         Scale rationale: with continuous streaming ingest, "append
         lands during a MERGE/DELETE" is the COMMON interleaving on a
         busy table — aborting the maintenance op each time makes
         large-table upkeep livelock-prone. Appends already auto-rebase
-        over rewrites (append path); this closes the other direction,
+        over rewrites (blind add); this closes the other direction,
         while anything that could change the rewrite's input still
         fails closed."""
-        if batch_id is not None and batch_id in self.committed_batch_ids():
-            return None
         cur = self.latest_version()
         pinned = attempt_version - 1
         pinned_m = self._manifest(pinned)
@@ -1504,65 +1574,33 @@ class VersionedTable:
         if batch_id is not None and batch_id in self.committed_batch_ids():
             return self.latest_version()  # replay: no-op before any write
         df = self._enforce(df)
-        schema_json = self._evolved_schema_json(df, version)
-        # pin the mapping the files are physically written under: the
-        # retry loop below must fail-close (re-write, actually) if a
-        # concurrent rename/drop changes it — appends never go through
-        # _rebase_rewrite, so without this check a retry could commit
-        # files whose physical names no longer match the new mapping
-        # (renamed a->b then concurrent b->c: appended 'b' bytes would
-        # surface under 'c' or read NULL — silent mis-binding).
-        write_mapping, write_retired = self._mapping_identity(version - 1)
+        schema_json = self._evolved_schema_json_of(df.schema, version)
+        # pin the mapping the files are physically written under: a
+        # lost race re-writes the group if a concurrent rename/drop
+        # changed it (renamed a->b then concurrent b->c: publishing the
+        # stale group, appended 'b' bytes would surface under 'c' or
+        # read NULL — silent mis-binding)
+        identity = self._mapping_identity(version - 1)
         new, new_stats = self._write_files(
-            df, stats_cols, bloom_cols, mapping=write_mapping
+            df, stats_cols, bloom_cols, mapping=identity[0]
         )
-        # Blind appends COMMUTE with every other commit (they only add
-        # files), so a lost version race is auto-resolved Delta-style:
-        # re-pin the fresh snapshot and re-publish the SAME already
-        # written group — the caller never re-executes the write, and
-        # no orphaned duplicate groups pile up the way caller-side
-        # retry-by-calling-append-again used to leave. Bounded so a
-        # wedged view (or a test's frozen one) still surfaces the
-        # conflict. Rewriting ops (upsert/delete/merge/...) do NOT get
-        # this: their commits are built ON a snapshot, so a conflict
-        # means stale reads and only the caller can rebuild.
-        for _ in range(10):
-            try:
-                return self._commit(
-                    prev_files + new,
-                    "append",
-                    schema_json,
-                    batch_id,
-                    stats={**prev_stats, **new_stats},
-                    version=version,
-                )
-            except CommitConflictError as e:
-                if batch_id is not None and batch_id in self.committed_batch_ids():
-                    return self.latest_version()  # replay raced us: no-op
-                conflict = e
-                version, prev_files, prev_stats = self._snapshot_state()
-                # the racing commit may itself have evolved the schema:
-                # re-derive the union against the FRESH snapshot (the
-                # conflict check re-raises if the winner is now
-                # irreconcilable with this frame)
-                schema_json = self._evolved_schema_json(df, version)
-                fresh_mapping, fresh_retired = self._mapping_identity(
-                    version - 1
-                )
-                if (
-                    fresh_mapping != write_mapping
-                    or fresh_retired != write_retired
-                ):
-                    # a rename/drop won the race: the already-written
-                    # group's physical names bind to the OLD mapping.
-                    # Re-write the group under the fresh mapping and
-                    # publish that instead (the stale group is
-                    # unreferenced; fsck/vacuum reclaims it).
-                    write_mapping, write_retired = fresh_mapping, fresh_retired
-                    new, new_stats = self._write_files(
-                        df, stats_cols, bloom_cols, mapping=write_mapping
-                    )
-        raise conflict
+        return self._publish(
+            "append",
+            prev_files + new,
+            {**prev_stats, **new_stats},
+            schema_json,
+            version,
+            batch_id,
+            rebase=self._blind_add(
+                df.schema,
+                new,
+                new_stats,
+                identity,
+                rewrite=lambda mapping: self._write_files(
+                    df, stats_cols, bloom_cols, mapping=mapping
+                ),
+            ),
+        )
 
     def commit_staged(
         self,
@@ -1588,25 +1626,26 @@ class VersionedTable:
         re-staged the same rows, leaving them would double-land
         nothing but would leak garbage), the committed schema is the
         evolution UNION, and a lost version race auto-resolves by
-        re-pinning (blind appends commute). The one divergence is the
+        re-pinning (the blind-add policy). The one divergence is the
         column-mapping race: ``append`` re-WRITES its group under a
         fresh mapping, but staged bytes cannot be rewritten without
         Spark — so a concurrent rename/drop fails the commit closed
         with an actionable message (restart the stream; its next
-        writer pins the new mapping). Tables with CHECK constraints
+        writer pins the new mapping). Every failure before publishing
+        drops the staged groups. Tables with CHECK constraints
         are refused for the same no-SparkSession reason; tables with
         GENERATED columns are accepted only when ``write_generated``
         attests the staged files carry values computed for exactly
         the current definitions (the native sink's narrow arrow
         evaluator — stream_sink._compile_generated).
 
-        ``base_version`` fences a commit derived from a snapshot the
-        caller read earlier (-1: the table was empty): if any commit
-        landed after it, the staged groups are dropped and
+        ``overwrite=True`` replaces the snapshot it pinned, so a lost
+        race fails closed (``CommitConflictError``) — re-pinning would
+        silently discard the winner's rows. ``base_version`` fences a
+        commit derived from a snapshot the caller read earlier (-1:
+        the table was empty): if any commit landed after it,
         ``CommitConflictError`` raises instead of the blind re-pin —
-        a rows-from-a-stale-read overwrite must never win a race."""
-        import shutil
-
+        a rows-from-a-stale-read commit must never win a race."""
         if self.check_constraints():
             raise ValueError(
                 f"table {self.root} has CHECK constraints; commit_staged "
@@ -1630,73 +1669,51 @@ class VersionedTable:
                 "re-pin them) — or write via append"
             )
 
-        def _drop_staged() -> None:
-            for g in groups:
-                shutil.rmtree(os.path.join(self.root, g), ignore_errors=True)
-
-        def _fence(version: int) -> None:
+        identity = (dict(write_mapping or {}), sorted(write_retired or []))
+        version, prev_files, prev_stats = self._snapshot_state()
+        try:
+            if batch_id is not None and batch_id in self.committed_batch_ids():
+                self._drop_groups(groups)
+                return self.latest_version()
             if base_version is not None and version != base_version + 1:
-                _drop_staged()
                 raise CommitConflictError(
                     f"table {self.root} moved past version {base_version} "
                     "while this commit's rows were derived from it"
                 )
-
-        version, prev_files, prev_stats = self._snapshot_state()
-        if batch_id is not None and batch_id in self.committed_batch_ids():
-            _drop_staged()
-            return self.latest_version()
-        incoming = StructType.fromJson(json.loads(incoming_schema_json))
-        conflict: Exception | None = None
-        for _ in range(10):
-            _fence(version)
             # mapping identity FIRST: after a rename, schema evolution
             # would also fail but with a misleading "physical name"
             # message — the actionable diagnosis is the mapping race
-            fresh_mapping, fresh_retired = self._mapping_identity(version - 1)
-            if (
-                fresh_mapping != (write_mapping or {})
-                or fresh_retired != sorted(write_retired or [])
-            ):
-                _drop_staged()
-                raise ValueError(
-                    f"table {self.root} changed its column mapping while "
-                    "the batch was being staged (concurrent RENAME/DROP "
-                    "COLUMN): the staged files bind to the old physical "
-                    "names — restart the stream to pin the new mapping"
-                )
+            if self._mapping_identity(version - 1) != identity:
+                raise self._remap_refused()
+            incoming = StructType.fromJson(json.loads(incoming_schema_json))
             if overwrite:
-                schema_json = incoming.json()
-            else:
-                schema_json = self._evolved_schema_json_of(incoming, version)
-            try:
-                # two literal call sites, not one computed action: the
-                # feed-classification meta-test AST-scans every
-                # _commit site and requires the action be a literal
-                if overwrite:
-                    return self._commit(
-                        list(groups),
-                        "overwrite",
-                        schema_json,
-                        batch_id,
-                        stats=dict(stats),
-                        version=version,
-                    )
-                return self._commit(
-                    prev_files + list(groups),
-                    "append",
-                    schema_json,
+                return self._publish(
+                    "overwrite",
+                    list(groups),
+                    dict(stats),
+                    incoming.json(),
+                    version,
                     batch_id,
-                    stats={**prev_stats, **stats},
-                    version=version,
                 )
-            except CommitConflictError as e:
-                if batch_id is not None and batch_id in self.committed_batch_ids():
-                    _drop_staged()
-                    return self.latest_version()
-                conflict = e
-                version, prev_files, prev_stats = self._snapshot_state()
-        raise conflict
+            return self._publish(
+                "append",
+                prev_files + list(groups),
+                {**prev_stats, **stats},
+                self._evolved_schema_json_of(incoming, version),
+                version,
+                batch_id,
+                # rows fenced on base_version were READ from it: a lost
+                # race fails closed instead of re-pinning
+                rebase=(
+                    None
+                    if base_version is not None
+                    else self._blind_add(incoming, list(groups), dict(stats), identity)
+                ),
+            )
+        except (CommitConflictError, ValueError):
+            # raised before any publish: the staged groups are garbage
+            self._drop_groups(groups)
+            raise
 
     _LOCAL_ROW_TYPES = frozenset(
         {"byte", "short", "integer", "long", "float", "double", "string",
@@ -1739,8 +1756,6 @@ class VersionedTable:
         anything whose size scales with input belongs on the
         distributed ``append`` path.
         """
-        import shutil as _shutil
-
         import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark.sql.types import StructType
@@ -1798,10 +1813,9 @@ class VersionedTable:
                 base_version=base_version,
             )
         except Exception:
-            # commit_staged's sanctioned failure paths drop staged
-            # groups themselves; anything else (schema evolution
-            # conflict, bad row shape) must not leak the directory
-            _shutil.rmtree(gdir, ignore_errors=True)
+            # commit_staged drops the group on its own failure paths;
+            # anything else (a bad row shape) must not leak it either
+            shutil.rmtree(gdir, ignore_errors=True)
             raise
 
     def append_all(
@@ -1837,9 +1851,6 @@ class VersionedTable:
                 "columns; append_all publishes via commit_staged, which "
                 "cannot enforce them — append sequentially"
             )
-        if len(dfs) == 1:
-            return [self.append(dfs[0], stats_cols=stats_cols,
-                                bloom_cols=bloom_cols)]
         from concurrent.futures import ThreadPoolExecutor
 
         write_mapping, write_retired = self._mapping_identity(
@@ -1867,29 +1878,27 @@ class VersionedTable:
                     )
                 )
         except Exception:
-            # a failed publish leaves the failing frame's groups (when
-            # the raise came from a path commit_staged does not clean,
-            # e.g. schema-evolution conflict) and every later frame's
-            # groups unreferenced — drop them all (rmtree is idempotent,
-            # double-dropping a sanctioned-path cleanup is harmless);
+            # a failed publish leaves every later frame's groups
+            # unreferenced — drop them (and the failing frame's, which
+            # commit_staged already dropped: rmtree is idempotent);
             # already-published commits stand, same as a sequential
             # caller that failed mid-list
-            import shutil as _shutil
-
             for groups, _, _ in staged[len(versions):]:
-                for g in groups:
-                    _shutil.rmtree(
-                        os.path.join(self.root, g), ignore_errors=True
-                    )
+                self._drop_groups(groups)
             raise
         return versions
 
     def _write_clustered_group(
-        self, df: DataFrame, col: str, n_groups: int
+        self,
+        df: DataFrame,
+        col: str,
+        n_groups: int,
+        mapping: dict[str, str] | None = None,
     ) -> tuple[list[str], dict]:
         """Range-partition ``df`` on ``col`` and land each range as its
-        own file group with tight min/max stats; returns (files, stats)
-        for the caller's commit."""
+        own file group with tight min/max stats, under ``mapping``'s
+        physical names (default: the current snapshot's); returns
+        (files, stats) for the caller's commit."""
         from pyspark.sql import functions as F
         from pyspark.sql.types import (
             ByteType,
@@ -1900,7 +1909,8 @@ class VersionedTable:
 
         group = uuid.uuid4().hex
         out = os.path.join(self._data, group)
-        mapping = self._mapping()
+        if mapping is None:
+            mapping = self._mapping()
         # Integral cluster keys (every engine call site): ONE Spark job
         # — write the ranged groups, then take each range's min/max/row
         # count from the parquet FOOTERS just written (driver-local
@@ -2022,14 +2032,26 @@ class VersionedTable:
         range, so nothing ever prunes)."""
         version, prev_files, prev_stats = self._snapshot_state()
         df = self._enforce(df)
-        schema_json = self._evolved_schema_json(df, version)
-        files, stats = self._write_clustered_group(df, col, n_groups)
-        return self._commit(
-            prev_files + files,
+        schema_json = self._evolved_schema_json_of(df.schema, version)
+        identity = self._mapping_identity(version - 1)
+        files, stats = self._write_clustered_group(
+            df, col, n_groups, identity[0]
+        )
+        return self._publish(
             "append",
+            prev_files + files,
+            {**prev_stats, **stats},
             schema_json,
-            stats={**prev_stats, **stats},
-            version=version,
+            version,
+            rebase=self._blind_add(
+                df.schema,
+                files,
+                stats,
+                identity,
+                rewrite=lambda mapping: self._write_clustered_group(
+                    df, col, n_groups, mapping
+                ),
+            ),
         )
 
     def overwrite(
@@ -2043,17 +2065,9 @@ class VersionedTable:
             return self.latest_version()
         df = self._enforce(df)
         new, new_stats = self._write_files(df, stats_cols)
-        try:
-            return self._commit(
-                new,
-                "overwrite",
-                df.schema.json(),
-                batch_id,
-                stats=new_stats,
-                version=version,
-            )
-        except CommitConflictError as e:
-            return self._resolve_conflict(batch_id, e)
+        return self._publish(
+            "overwrite", new, new_stats, df.schema.json(), version, batch_id
+        )
 
     def snapshot_files(
         self,
@@ -2146,12 +2160,12 @@ class VersionedTable:
         cur_retired = set(
             self._manifest(next_version - 1).get("retired_physical") or []
         ) | set(m.get("retired_physical") or [])
-        committed = self._commit(
-            m["files"],
+        committed = self._publish(
             "restore",
+            m["files"],
+            m.get("stats", {}),
             m["schema"],
-            stats=m.get("stats", {}),
-            version=next_version,
+            next_version,
             # adopt the TARGET snapshot's deletion vectors verbatim —
             # inheriting the CURRENT version's would apply later
             # deletes to the restored rows
@@ -2281,13 +2295,13 @@ class VersionedTable:
             with open(tmp, "w", encoding="utf-8") as f:
                 json.dump(cons, f)
             os.replace(tmp, dest._constraints_path())
-        dest._commit(
-            list(m["files"]),
+        dest._publish(
             "clone",
+            list(m["files"]),
+            m.get("stats") or {},
             m["schema"],
-            stats=m.get("stats") or {},
+            0,
             dvs=dvs,
-            version=0,
             provenance={
                 "cloned_from": os.path.abspath(self.root),
                 "source_version": version,
@@ -2310,9 +2324,7 @@ class VersionedTable:
         version, _, _ = self._snapshot_state()
         df = self._enforce(df)
         files, stats = self._write_clustered_group(df, col, n_groups)
-        return self._commit(
-            files, "overwrite", df.schema.json(), stats=stats, version=version
-        )
+        return self._publish("overwrite", files, stats, df.schema.json(), version)
 
     def append_zordered(
         self,
@@ -2337,24 +2349,33 @@ class VersionedTable:
         driver data is the 2-value min/max row. Numeric columns only —
         temporal callers pass unix micros."""
         df = self._enforce(df)  # same write gate as every other ingest path
-        lv = self.latest_version()
+        version, prev_files, prev_stats = self._snapshot_state()
         # schema gate BEFORE the write so a conflicting frame leaves
-        # no orphan group behind (re-derived at commit below)
-        self._evolved_schema_json(df, 0 if lv is None else lv + 1)
-        written = self._write_zordered_group(df, cols, n_groups, bits)
+        # no orphan group behind
+        schema_json = self._evolved_schema_json_of(df.schema, version)
+        identity = self._mapping_identity(version - 1)
+        written = self._write_zordered_group(df, cols, n_groups, bits, identity[0])
         if written is None:
             # empty (or all-NULL-keys) batch: no z-curve to compute —
             # land it through append's empty-tolerant path instead of
             # float(None) crashing (normal for filtered micro-batches)
             return self.append(df)
         files, stats = written
-        version, prev_files, prev_stats = self._snapshot_state()
-        return self._commit(
-            prev_files + files,
+        return self._publish(
             "append",
-            self._evolved_schema_json(df, version),
-            stats={**prev_stats, **stats},
-            version=version,
+            prev_files + files,
+            {**prev_stats, **stats},
+            schema_json,
+            version,
+            rebase=self._blind_add(
+                df.schema,
+                files,
+                stats,
+                identity,
+                rewrite=lambda mapping: self._write_zordered_group(
+                    df, cols, n_groups, bits, mapping
+                ),
+            ),
         )
 
     def rewrite_zordered(
@@ -2380,15 +2401,21 @@ class VersionedTable:
                 "has no curve to sort along; compact() instead"
             )
         files, stats = written
-        return self._commit(
-            files, "rewrite_zordered", df.schema.json(), stats=stats, version=version
+        return self._publish(
+            "rewrite_zordered", files, stats, df.schema.json(), version
         )
 
     def _write_zordered_group(
-        self, df: DataFrame, cols: tuple, n_groups: int, bits: int
+        self,
+        df: DataFrame,
+        cols: tuple,
+        n_groups: int,
+        bits: int,
+        mapping: dict[str, str] | None = None,
     ) -> tuple[list[str], dict] | None:
         """Land ``df`` as one Morton-ordered file group over N >= 2
-        columns; returns (files, stats) for the caller's commit, or
+        columns, under ``mapping``'s physical names (default: the
+        current snapshot's); returns (files, stats) for the caller's commit, or
         None when the frame has no non-NULL key tuple to bucketize.
         Bit i of column j lands at z-position ``len(cols)*i + j`` —
         the straight N-ary Morton interleave, all expression-level
@@ -2438,7 +2465,8 @@ class VersionedTable:
             out = os.path.join(self._data, group)
             with_bucket = ranged.withColumn("_rb", F.spark_partition_id())
             self._to_physical(
-                with_bucket.drop("_z"), self._mapping()
+                with_bucket.drop("_z"),
+                self._mapping() if mapping is None else mapping,
             ).write.mode("overwrite").partitionBy("_rb").parquet(out)
             stat_rows = (
                 with_bucket.groupBy("_rb")
@@ -2834,7 +2862,7 @@ class VersionedTable:
         columns a file predates and up-casts numerics a file wrote
         narrower (int->long, float->double), which footer merging
         refuses outright (CANNOT_MERGE_SCHEMAS). Sound because the
-        append-path evolution gate (_evolved_schema_json) guarantees
+        append-path evolution gate (_evolved_schema_json_of) guarantees
         every committed file's schema is a subset-or-widenable of its
         version's manifest schema."""
         m = self._manifest(version)
@@ -3590,30 +3618,19 @@ class VersionedTable:
         if done is not None:
             return done
         files, schema_json, stats, dvs, version, changes_rel = payload
-        would_read = self._merge_would_read(
-            source, keys, when_not_matched_by_source
-        )
-        for _ in range(10):
-            try:
-                return self._commit(
-                    files,
-                    "merge",
-                    schema_json,
-                    batch_id,
-                    stats=stats,
-                    version=version,
-                    dvs=dvs,
-                    changes=changes_rel,
-                )
-            except CommitConflictError as e:
-                rb = self._rebase_rewrite(
-                    e, batch_id, version, files, stats, schema_json, would_read
-                )
-                if rb is None:
-                    return self.latest_version()
-                files, stats, schema_json, version = rb
-        raise CommitConflictError(
-            f"merge on {self.root} lost 10 consecutive version races"
+        return self._publish(
+            "merge",
+            files,
+            stats,
+            schema_json,
+            version,
+            batch_id,
+            rebase=partial(
+                self._rebase_rewrite,
+                self._merge_would_read(source, keys, when_not_matched_by_source),
+            ),
+            dvs=dvs,
+            changes=changes_rel,
         )
 
     def _merge_would_read(
@@ -3675,28 +3692,18 @@ class VersionedTable:
         if done is not None:
             return done
         files, schema_json, stats, dvs, version, changes_rel = payload
-        would_read = self._merge_would_read(updates, keys, "keep")
-        for _ in range(10):
-            try:
-                return self._commit(
-                    files,
-                    "upsert",
-                    schema_json,
-                    batch_id,
-                    stats=stats,
-                    version=version,
-                    dvs=dvs,
-                    changes=changes_rel,
-                )
-            except CommitConflictError as e:
-                rb = self._rebase_rewrite(
-                    e, batch_id, version, files, stats, schema_json, would_read
-                )
-                if rb is None:
-                    return self.latest_version()
-                files, stats, schema_json, version = rb
-        raise CommitConflictError(
-            f"upsert on {self.root} lost 10 consecutive version races"
+        return self._publish(
+            "upsert",
+            files,
+            stats,
+            schema_json,
+            version,
+            batch_id,
+            rebase=partial(
+                self._rebase_rewrite, self._merge_would_read(updates, keys, "keep")
+            ),
+            dvs=dvs,
+            changes=changes_rel,
         )
 
     def delete_where(
@@ -3830,30 +3837,15 @@ class VersionedTable:
             finally:
                 df.unpersist()
         kept_stats = {f: s for f, s in prev_stats.items() if f not in affected}
-        files = untouched + new
-        stats = {**kept_stats, **new_stats}
-        schema_json = self._manifest(version - 1)["schema"]
-        would_read = self._prune_would_read(prune)
-        for _ in range(10):
-            try:
-                return self._commit(
-                    files,
-                    "delete",
-                    schema_json,
-                    batch_id,
-                    stats=stats,
-                    version=version,
-                    changes=changes_rel,
-                )
-            except CommitConflictError as e:
-                rb = self._rebase_rewrite(
-                    e, batch_id, version, files, stats, schema_json, would_read
-                )
-                if rb is None:
-                    return self.latest_version()
-                files, stats, schema_json, version = rb
-        raise CommitConflictError(
-            f"delete on {self.root} lost 10 consecutive version races"
+        return self._publish(
+            "delete",
+            untouched + new,
+            {**kept_stats, **new_stats},
+            self._manifest(version - 1)["schema"],
+            version,
+            batch_id,
+            rebase=partial(self._rebase_rewrite, self._prune_would_read(prune)),
+            changes=changes_rel,
         )
 
     def _prune_would_read(
@@ -4012,31 +4004,16 @@ class VersionedTable:
                         changes_rel = f"changes/{cap_group}"
             finally:
                 matched.unpersist()
-        files = list(prev_files)
-        stats = dict(prev_stats)
-        schema_json = self._manifest(version - 1)["schema"]
-        would_read = self._prune_would_read(prune)
-        for _ in range(10):
-            try:
-                return self._commit(
-                    files,
-                    "delete_dv",
-                    schema_json,
-                    batch_id,
-                    stats=stats,
-                    version=version,
-                    changes=changes_rel,
-                    dvs=dvs,
-                )
-            except CommitConflictError as e:
-                rb = self._rebase_rewrite(
-                    e, batch_id, version, files, stats, schema_json, would_read
-                )
-                if rb is None:
-                    return self.latest_version()
-                files, stats, schema_json, version = rb
-        raise CommitConflictError(
-            f"delete_dv on {self.root} lost 10 consecutive version races"
+        return self._publish(
+            "delete_dv",
+            list(prev_files),
+            dict(prev_stats),
+            self._manifest(version - 1)["schema"],
+            version,
+            batch_id,
+            rebase=partial(self._rebase_rewrite, self._prune_would_read(prune)),
+            changes=changes_rel,
+            dvs=dvs,
         )
 
     def replace_where(
@@ -4125,30 +4102,15 @@ class VersionedTable:
             if old is not None:
                 old.unpersist()
         kept_stats = {f: s for f, s in prev_stats.items() if f not in affected}
-        files = untouched + new
-        stats = {**kept_stats, **new_stats}
-        schema_json = df.schema.json()
-        would_read = self._prune_would_read(prune)
-        for _ in range(10):
-            try:
-                return self._commit(
-                    files,
-                    "replace_where",
-                    schema_json,
-                    batch_id,
-                    stats=stats,
-                    version=version,
-                    changes=changes_rel,
-                )
-            except CommitConflictError as e:
-                rb = self._rebase_rewrite(
-                    e, batch_id, version, files, stats, schema_json, would_read
-                )
-                if rb is None:
-                    return self.latest_version()
-                files, stats, schema_json, version = rb
-        raise CommitConflictError(
-            f"replace_where on {self.root} lost 10 consecutive version races"
+        return self._publish(
+            "replace_where",
+            untouched + new,
+            {**kept_stats, **new_stats},
+            df.schema.json(),
+            version,
+            batch_id,
+            rebase=partial(self._rebase_rewrite, self._prune_would_read(prune)),
+            changes=changes_rel,
         )
 
     def compact(self, spark: SparkSession, target_partitions: int = 8) -> int:
@@ -4204,9 +4166,7 @@ class VersionedTable:
         finally:
             if multi_consumer:
                 df.unpersist()
-        return self._commit(
-            new, "compact", df.schema.json(), stats=new_stats, version=version
-        )
+        return self._publish("compact", new, new_stats, df.schema.json(), version)
 
     @staticmethod
     def _size_rebuilt_blooms(
@@ -4350,29 +4310,13 @@ class VersionedTable:
         kept_stats = {
             f: s for f, s in prev_stats.items() if f not in aset
         }
-        files = untouched + new
-        stats = {**kept_stats, **new_stats}
-        schema_json = self._manifest(version - 1)["schema"]
-        for _ in range(10):
-            try:
-                return self._commit(
-                    files, "compact", schema_json, stats=stats, version=version
-                )
-            except CommitConflictError as e:
-                rb = self._rebase_rewrite(
-                    e,
-                    None,
-                    version,
-                    files,
-                    stats,
-                    schema_json,
-                    lambda v, added: set(),
-                )
-                if rb is None:  # unreachable without batch_id; guard
-                    return self.latest_version()
-                files, stats, schema_json, version = rb
-        raise CommitConflictError(
-            f"compact_where on {self.root} lost 10 consecutive version races"
+        return self._publish(
+            "compact",
+            untouched + new,
+            {**kept_stats, **new_stats},
+            self._manifest(version - 1)["schema"],
+            version,
+            rebase=partial(self._rebase_rewrite, lambda v, added: ()),
         )
 
     def rewrite_clustered(
@@ -4390,8 +4334,8 @@ class VersionedTable:
         version, _, _ = self._snapshot_state()
         df = self.read(spark, version=version - 1 if version else None)
         files, stats = self._write_clustered_group(df, col, n_groups)
-        return self._commit(
-            files, "rewrite_clustered", df.schema.json(), stats=stats, version=version
+        return self._publish(
+            "rewrite_clustered", files, stats, df.schema.json(), version
         )
 
     def maybe_compact(
@@ -4482,19 +4426,15 @@ class VersionedTable:
                 for f in schema.fields
             ]
         )
-        new_stats = self._rekey_stats(prev_stats, {old: new}, drop=None)
-        try:
-            return self._commit(
-                list(prev_files),
-                "rename_column",
-                new_schema.json(),
-                stats=new_stats,
-                version=version,
-                column_mapping=mapping,
-                retired_physical=retired,
-            )
-        except CommitConflictError as e:
-            return self._resolve_conflict(None, e)
+        return self._publish(
+            "rename_column",
+            list(prev_files),
+            self._rekey_stats(prev_stats, {old: new}, drop=None),
+            new_schema.json(),
+            version,
+            column_mapping=mapping,
+            retired_physical=retired,
+        )
 
     def drop_column(self, name: str) -> int:
         """Metadata-only DROP COLUMN: the column leaves the logical
@@ -4538,19 +4478,15 @@ class VersionedTable:
         if phys not in retired:
             retired.append(phys)
         new_schema = StructType([f for f in schema.fields if f.name != name])
-        new_stats = self._rekey_stats(prev_stats, {}, drop=name)
-        try:
-            return self._commit(
-                list(prev_files),
-                "drop_column",
-                new_schema.json(),
-                stats=new_stats,
-                version=version,
-                column_mapping=mapping,
-                retired_physical=retired,
-            )
-        except CommitConflictError as e:
-            return self._resolve_conflict(None, e)
+        return self._publish(
+            "drop_column",
+            list(prev_files),
+            self._rekey_stats(prev_stats, {}, drop=name),
+            new_schema.json(),
+            version,
+            column_mapping=mapping,
+            retired_physical=retired,
+        )
 
     @staticmethod
     def _rekey_stats(
@@ -4777,33 +4713,14 @@ class VersionedTable:
                 new_stats[f][_ROWS_KEY] = _footer_rows(
                     os.path.join(self.root, f)
                 )
-        files = list(prev_files)
-        stats = new_stats
-        schema_json = self._manifest(version - 1)["schema"]
-        for _ in range(10):
-            try:
-                return self._commit(
-                    files,
-                    "analyze",
-                    schema_json,
-                    stats=stats,
-                    version=version,
-                )
-            except CommitConflictError as e:
-                rb = self._rebase_rewrite(
-                    e,
-                    None,
-                    version,
-                    files,
-                    stats,
-                    schema_json,
-                    lambda v, added: (),  # appends never invalidate stats
-                )
-                if rb is None:
-                    return self.latest_version()
-                files, stats, schema_json, version = rb
-        raise CommitConflictError(
-            f"analyze on {self.root} lost 10 consecutive version races"
+        return self._publish(
+            "analyze",
+            list(prev_files),
+            new_stats,
+            self._manifest(version - 1)["schema"],
+            version,
+            # appends never invalidate stats
+            rebase=partial(self._rebase_rewrite, lambda v, added: ()),
         )
 
     def operation_metrics(self, version: int) -> dict:

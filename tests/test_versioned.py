@@ -6,6 +6,7 @@ vacuum — the Delta-style semantics the reference's Mongo store lacked
 import json
 
 import pyspark.sql.functions as F
+import pytest as _pytest
 
 from netflow_analysis_with_spark_streaming_spark.storage.versioned import (
     VersionedTable,
@@ -1830,33 +1831,49 @@ def test_restore_rolls_back_on_concurrent_vacuum(spark, tmp_path, monkeypatch):
 
 
 def test_every_commit_action_is_feed_classified():
-    """Closed-world meta-test over the change-feed action taxonomy:
-    AST-scan every `self._commit(...)` call site in storage/versioned.py
-    and assert each committed action string is (a) a literal — a
-    computed action could dodge this test — and (b) classified in
-    EXACTLY one of the feed sets (row-preserving / insert / capture /
-    feed-breaking). A new commit path whose action is missing from the
-    sets fails HERE at development time instead of wedging change-feed
-    consumers at runtime; a stale classification entry with no commit
-    site fails too."""
+    """Closed-world meta-test over the commit path and the change-feed
+    action taxonomy. Every commit publishes through ONE lost-race loop:
+    `_commit` (the one-attempt primitive) has exactly one call site in
+    storage/versioned.py, inside `_publish`, and the old per-caller
+    resolver `_resolve_conflict` is gone. AST-scan every
+    `._publish(...)` call site and assert each committed action string
+    is (a) a literal — a computed action could dodge this test — and
+    (b) classified in EXACTLY one of the feed sets (row-preserving /
+    insert / capture / feed-breaking). A new commit path whose action
+    is missing from the sets fails HERE at development time instead of
+    wedging change-feed consumers at runtime; a stale classification
+    entry with no commit site fails too."""
     import ast
     import inspect
 
     from netflow_analysis_with_spark_streaming_spark.storage import versioned
 
     tree = ast.parse(inspect.getsource(versioned))
+    commit_sites = [
+        (fn.name, node)
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "_commit"
+    ]
+    assert [name for name, _ in commit_sites] == ["_publish"], (
+        "_commit must be called only from _publish — every commit goes "
+        f"through the one lost-race loop; found {commit_sites}"
+    )
+    assert not hasattr(versioned.VersionedTable, "_resolve_conflict")
+    assert "_resolve_conflict" not in inspect.getsource(versioned)
     committed: set = set()
     bad: list = []
     for node in ast.walk(tree):
         if not (
             isinstance(node, ast.Call)
             and isinstance(node.func, ast.Attribute)
-            and node.func.attr == "_commit"
+            and node.func.attr == "_publish"
         ):
             continue
-        action = None
-        if len(node.args) >= 2:
-            action = node.args[1]
+        action = node.args[0] if node.args else None
         for kw in node.keywords:
             if kw.arg == "action":
                 action = kw.value
@@ -1864,8 +1881,8 @@ def test_every_commit_action_is_feed_classified():
             committed.add(action.value)
         else:
             bad.append(ast.dump(node.func))
-    assert not bad, f"non-literal action at _commit call site(s): {bad}"
-    assert committed, "no _commit call sites found — scan is broken"
+    assert not bad, f"non-literal action at _publish call site(s): {bad}"
+    assert committed, "no _publish call sites found — scan is broken"
     sets = {
         "row_preserving": versioned._FEED_ROW_PRESERVING,
         "insert": versioned._FEED_INSERT_ACTIONS,
@@ -2263,8 +2280,32 @@ def test_mirror_from_feed_walls_on_feed_breaking_source(spark, tmp_path):
         mirror_from_feed(spark, src, dst, keys=["k"], since_version=-1)
 
 
-def test_append_auto_retries_conflict_without_rewriting(spark, tmp_path):
-    """A blind append losing the version race auto-resolves on a
+def _kx(spark, ks):
+    return spark.createDataFrame([(k, k) for k in ks], "k long, x long")
+
+
+# every blind-add entry point, landing the loser's rows 3 and 4
+# (append_all as two frames, so two commits)
+_BLIND_ADDS = {
+    "append": lambda t, spark: t.append(_kx(spark, [3, 4])),
+    "append_clustered": lambda t, spark: t.append_clustered(
+        _kx(spark, [3, 4]), "k"
+    ),
+    "append_zordered": lambda t, spark: t.append_zordered(
+        _kx(spark, [3, 4]), ("k", "x")
+    ),
+    "append_rows": lambda t, spark: t.append_rows(
+        [(3, 3), (4, 4)], _kx(spark, []).schema
+    ),
+    "append_all": lambda t, spark: t.append_all(
+        [_kx(spark, [3]), _kx(spark, [4])]
+    ),
+}
+
+
+@_pytest.mark.parametrize("writer", sorted(_BLIND_ADDS))
+def test_append_auto_retries_conflict_without_rewriting(spark, tmp_path, writer):
+    """Every blind add losing the version race auto-resolves on a
     fresh snapshot (appends commute): the loser's ALREADY-WRITTEN
     group is re-published under the next version — no second data
     write, no orphaned duplicate group, both writers' rows land."""
@@ -2272,23 +2313,73 @@ def test_append_auto_retries_conflict_without_rewriting(spark, tmp_path):
 
     root = str(tmp_path / "t")
     t = VersionedTable(root)
-    t.append(_df(spark, [(1, "a")]))  # v0
+    t.append(_kx(spark, [1]))  # v0
     loser = VersionedTable(root)
-    real_commit = loser._commit
+    _inject_once(loser, lambda: VersionedTable(root).append(_kx(spark, [2])))
+    v = _BLIND_ADDS[writer](loser, spark)
+    # landed as the NEXT version(s), no exception to the caller
+    assert v == ([2, 3] if writer == "append_all" else 2)
+    assert sorted(r["k"] for r in t.read(spark).collect()) == [1, 2, 3, 4]
+    # exactly the seed's, the winner's and the loser's groups on disk
+    # (the retry re-published the same group instead of rewriting)
+    n_loser = 2 if writer == "append_all" else 1
+    assert len(os.listdir(os.path.join(root, "data"))) == 2 + n_loser
+    assert t.fsck() == []
 
-    def racing_commit(*args, **kw):
-        if not hasattr(racing_commit, "fired"):
-            racing_commit.fired = True  # another writer claims v1 mid-flight
-            VersionedTable(root).append(_df(spark, [(2, "w")]))
-        return real_commit(*args, **kw)
 
-    loser._commit = racing_commit
-    v = loser.append(_df(spark, [(3, "l")]))
-    assert v == 2  # landed as the NEXT version, no exception to the caller
-    assert sorted(r["k"] for r in t.read(spark).collect()) == [1, 2, 3]
-    # exactly three data groups on disk: seed + winner + loser (the
-    # retry re-published the same group instead of rewriting)
-    assert len(os.listdir(os.path.join(root, "data"))) == 3
+# every commit that REPLACES the snapshot it pinned: it must fail
+# closed when a concurrent append wins its slot
+_FAIL_CLOSED = {
+    "overwrite": lambda t, spark, dest: t.overwrite(_kx(spark, [3])),
+    "overwrite_clustered": lambda t, spark, dest: t.overwrite_clustered(
+        _kx(spark, [3]), "k"
+    ),
+    "append_rows_overwrite": lambda t, spark, dest: t.append_rows(
+        [(3, 3)], _kx(spark, []).schema, overwrite=True
+    ),
+    "compact": lambda t, spark, dest: t.compact(spark),
+    "rewrite_clustered": lambda t, spark, dest: t.rewrite_clustered(spark, "k"),
+    "rewrite_zordered": lambda t, spark, dest: t.rewrite_zordered(
+        spark, ("k", "x")
+    ),
+    "rename_column": lambda t, spark, dest: t.rename_column("x", "y"),
+    "drop_column": lambda t, spark, dest: t.drop_column("x"),
+    "restore": lambda t, spark, dest: t.restore(0),
+    "clone": lambda t, spark, dest: t.clone(dest),
+}
+
+
+@_pytest.mark.parametrize("writer", sorted(_FAIL_CLOSED))
+def test_snapshot_replacing_commit_fails_closed_on_lost_race(
+    spark, tmp_path, monkeypatch, writer
+):
+    """A commit that replaces the snapshot it pinned (overwrites,
+    whole-table rewrites, rename/drop, restore, clone) must not re-pin
+    on a lost race — that would silently discard the winner's rows
+    (the staged overwrite used to land [3] over a concurrent append).
+    It raises CommitConflictError, publishes nothing, and the winner's
+    row stays readable."""
+    from netflow_analysis_with_spark_streaming_spark.storage.versioned import (
+        CommitConflictError,
+    )
+
+    root = str(tmp_path / "t")
+    t = VersionedTable(root)
+    t.append(_kx(spark, [1]))  # v0
+    # clone publishes through a handle it builds on its destination, so
+    # the race is injected on the class: the next commit anywhere loses
+    target = str(tmp_path / "dest") if writer == "clone" else root
+    monkeypatch.setattr(VersionedTable, "_commit", VersionedTable._commit)
+    _inject_once(
+        VersionedTable, lambda: VersionedTable(target).append(_kx(spark, [2]))
+    )
+    with _pytest.raises(CommitConflictError):
+        _FAIL_CLOSED[writer](t, spark, target)
+    won = VersionedTable(target)
+    assert won.versions() == ([0] if writer == "clone" else [0, 1])
+    assert sorted(r["k"] for r in won.read(spark).collect()) == (
+        [2] if writer == "clone" else [1, 2]
+    )
 
 
 def test_writer_protocol_gate(spark, tmp_path):
@@ -3350,7 +3441,6 @@ def test_rebase_folds_concurrent_schema_evolution(spark, tmp_path):
     assert len(rows) == 91
 
 
-import pytest as _pytest
 
 
 @_pytest.mark.parametrize("delta_log", [False, True])
@@ -4581,8 +4671,10 @@ def test_detail_after_vacuum_past_version_zero(spark, tmp_path):
     assert d["created_ts"] == oldest
 
 
-def test_append_retry_rewrites_under_fresh_mapping(spark, tmp_path):
-    """ADVICE r9 #2: an append losing its commit race to a concurrent
+@_pytest.mark.parametrize("writer", ["append", "append_clustered"])
+def test_append_retry_rewrites_under_fresh_mapping(spark, tmp_path, writer):
+    """ADVICE r9 #2: an append (plain or clustered — every blind add
+    with a SparkSession) losing its commit race to a concurrent
     RENAME must not publish the already-written group (its physical
     names bind to the superseded mapping — silent mis-binding); the
     retry re-writes the group under the fresh mapping. Scenario is the
@@ -4604,9 +4696,11 @@ def test_append_retry_rewrites_under_fresh_mapping(spark, tmp_path):
         return real_commit(*args, **kw)
 
     loser._commit = racing_commit
-    v = loser.append(
-        spark.createDataFrame([(3, "l")], "k long, b string")
-    )
+    frame = spark.createDataFrame([(3, "l")], "k long, b string")
+    if writer == "append":
+        v = loser.append(frame)
+    else:
+        v = loser.append_clustered(frame, "k")
     assert v == 3
     got = {r["k"]: (r["c"], r["b"]) for r in t.read(spark).collect()}
     # old row reads under 'c' (physical v); appended row's value binds
